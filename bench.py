@@ -117,36 +117,27 @@ HEADLINE = [
 # MIN OF TWO cold runs (the second after clearing the memos): a single
 # first sample has no stall protection, and this host's documented ~20 s
 # hypervisor freezes would otherwise poison the cold-to-cold comparison
-# BASELINE.md prescribes.
-MEMOIZED = (
-    "trainer_prep",
-    "corpus_report",
-    "embed_ann_ivf",
-    "dedup_incremental_indexed",
-    "bm25_indexed",
-)
+# BASELINE.md prescribes. Each name maps to its family in
+# ``ts_etl_spark.execution``'s construction memo.
+MEMOIZED = {
+    "trainer_prep": "bpe",
+    "corpus_report": "maint",
+    "embed_ann_ivf": "ivf",
+    "dedup_incremental_indexed": "dedup_index",
+    "bm25_indexed": "bm25_lex",
+}
 
 
 def _clear_construction_memos(name: str):
     """Drop ONE entry's per-(application, sf_dir) construction memo so
     its second cold run pays the construction cost again. Per-entry on
-    purpose: _IVF_MEMO is SHARED with embed_neardup_label (measured
-    earlier in HEADLINE order), and a wipe-everything clear while
-    processing trainer_prep/corpus_report would shift embed_ann_ivf's
-    cold baseline round-over-round with no code change."""
-    if name == "trainer_prep":
-        from ts_etl_spark.pipelines.trainer_prep import _BPE_MERGES_MEMO as m
-    elif name == "corpus_report":
-        from ts_etl_spark.operators.report import _MAINT_MEMO as m
-    elif name == "embed_ann_ivf":
-        from ts_etl_spark.operators.similarity import _IVF_MEMO as m
-    elif name == "dedup_incremental_indexed":
-        from ts_etl_spark.operators.dedup import _BENCH_INDEX_MEMO as m
-    elif name == "bm25_indexed":
-        from ts_etl_spark.operators.bm25 import _BENCH_LEX_MEMO as m
-    else:
-        raise KeyError(f"no construction memo registered for {name!r}")
-    m.clear()
+    purpose: the "ivf" family is SHARED with embed_neardup_label
+    (measured earlier in HEADLINE order), and a wipe-everything clear
+    while processing trainer_prep/corpus_report would shift
+    embed_ann_ivf's cold baseline round-over-round with no code change."""
+    from ts_etl_spark.execution import clear_memo
+
+    clear_memo(MEMOIZED[name])
 
 # Timed under the same protocol as HEADLINE but NOT `queries()` entries:
 # the registry is consolidated to exactly 50 (the driver's verification

@@ -166,14 +166,15 @@ def test_trainer_prep_memoizes_bpe_merges(spark):
     (application, sf_dir) — the bound that keeps the driver's repeated
     plan builds (sweep, oracle, soak, bench samples) from re-paying a
     corpus pass per build. Same-object check = the memo was hit."""
+    from ts_etl_spark.execution import clear_memo, memo_entries
     from ts_etl_spark.pipelines import trainer_prep as tp
 
-    tp._BPE_MERGES_MEMO.clear()
+    clear_memo("bpe")
     tp.q_trainer_prep(spark, "/root/testdata/sf0.001")
-    assert len(tp._BPE_MERGES_MEMO) == 1
-    (first,) = tp._BPE_MERGES_MEMO.values()
+    assert len(memo_entries("bpe")) == 1
+    (first,) = memo_entries("bpe").values()
     tp.q_trainer_prep(spark, "/root/testdata/sf0.001")
-    assert len(tp._BPE_MERGES_MEMO) == 1
-    (second,) = tp._BPE_MERGES_MEMO.values()
+    assert len(memo_entries("bpe")) == 1
+    (second,) = memo_entries("bpe").values()
     assert second is first
-    tp._BPE_MERGES_MEMO.clear()
+    clear_memo("bpe")

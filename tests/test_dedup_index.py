@@ -419,8 +419,8 @@ def test_bench_indexed_supplement_matches_plain(spark):
     the derive-from-text supplement on the same 90/10 split — the bench
     delta between them is then attributable purely to the materialized
     index, not to a semantics difference."""
+    from ts_etl_spark.execution import memo_entries
     from ts_etl_spark.operators.dedup import (
-        _BENCH_INDEX_MEMO,
         q_dedup_incremental,
         q_dedup_incremental_indexed,
     )
@@ -436,9 +436,9 @@ def test_bench_indexed_supplement_matches_plain(spark):
     )
     assert got == want
     # memoized staging: a second build reuses the staged directory
-    n_memo = len(_BENCH_INDEX_MEMO)
+    n_memo = len(memo_entries("dedup_index"))
     q_dedup_incremental_indexed(spark, sf)
-    assert len(_BENCH_INDEX_MEMO) == n_memo
+    assert len(memo_entries("dedup_index")) == n_memo
 
 
 @pytest.mark.slow

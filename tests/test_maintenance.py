@@ -202,14 +202,15 @@ def test_corpus_report_memoizes_attestation(spark):
     """Building the corpus_report entry twice must not re-run the
     attestation rewrites: the driver-side verdict list memoizes per
     (application, sf_dir) — the trainer_prep BPE-merge pattern."""
+    from ts_etl_spark.execution import clear_memo, memo_entries
     from ts_etl_spark.operators import report as R
 
-    R._MAINT_MEMO.clear()
+    clear_memo("maint")
     R.q_corpus_report(spark, SF)
-    assert len(R._MAINT_MEMO) == 1
-    (first,) = R._MAINT_MEMO.values()
+    assert len(memo_entries("maint")) == 1
+    (first,) = memo_entries("maint").values()
     R.q_corpus_report(spark, SF)
-    (second,) = R._MAINT_MEMO.values()
-    assert second is first and len(R._MAINT_MEMO) == 1
+    (second,) = memo_entries("maint").values()
+    assert second is first and len(memo_entries("maint")) == 1
     assert dict(first) == {"compact": True, "zorder": True}
-    R._MAINT_MEMO.clear()
+    clear_memo("maint")

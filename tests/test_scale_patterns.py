@@ -456,13 +456,14 @@ def test_ann_entry_memoizes_vectors_and_training(spark):
     sf_dir) — the bound that keeps the driver's repeated plan builds
     (sweep, oracle, soak, bench warmup) from leaking caches or paying
     the MLlib fit each time."""
+    from ts_etl_spark.execution import clear_memo, memo_entries
     from ts_etl_spark.operators import similarity as S
 
-    S._IVF_MEMO.clear()
+    clear_memo("ivf")
     S.q_embed_ann_ivf(spark, SF)
-    first = dict(S._IVF_MEMO)
+    first = memo_entries("ivf")
     S.q_embed_ann_ivf(spark, SF)
-    assert S._IVF_MEMO == first  # same four entries, same objects
+    assert memo_entries("ivf") == first  # same four entries, same objects
     # vecs + trained centroids + the shared brute-force exact frame that
     # feeds both the trained-recall gate and the q8 recall/error gates,
     # plus the pca/pq/ivfpq/ann-index gates' literal evidence rows
@@ -483,7 +484,7 @@ def test_ann_entry_memoizes_vectors_and_training(spark):
     for (_, _, _kind), frame in first.items():
         if hasattr(frame, "unpersist"):
             frame.unpersist()
-    S._IVF_MEMO.clear()
+    clear_memo("ivf")
 
 
 def test_pca_reduce_matches_numpy_and_preserves_structure(spark):

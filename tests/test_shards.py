@@ -210,7 +210,7 @@ def test_cli_explain_preserves_application_lifetime_memo(spark):
     import io
 
     from ts_etl_spark.cli import run_explain
-    from ts_etl_spark.operators import similarity
+    from ts_etl_spark.execution import clear_memo, memo_entries
 
     # self-contained: the assertion below is "explain populated the memo
     # and left its frames persisted", so start from an empty memo — an
@@ -219,12 +219,12 @@ def test_cli_explain_preserves_application_lifetime_memo(spark):
     # this surface's behavior under test (order-dependence surfaced when
     # the round-16 slow tier removed the test that happened to repopulate
     # the memo in between)
-    similarity._IVF_MEMO.clear()
+    clear_memo("ivf")
     buf = io.StringIO()
     assert run_explain("embed_neardup_label", SF, spark=spark, out=buf) == 0
     app = spark.sparkContext.applicationId
-    vecs = similarity._IVF_MEMO.get((app, SF, "vecs"))
-    edges = similarity._IVF_MEMO.get((app, SF, "neardup_edges"))
+    vecs = memo_entries("ivf").get((app, SF, "vecs"))
+    edges = memo_entries("ivf").get((app, SF, "neardup_edges"))
     assert vecs is not None and edges is not None, "explain populated the memo"
     assert vecs.storageLevel.useMemory, "explain unpersisted the memoized vecs"
     assert edges.storageLevel.useMemory, "explain unpersisted the memoized edges"

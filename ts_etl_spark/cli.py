@@ -369,10 +369,10 @@ def run_explain(
         else:
             # plan CONSTRUCTION may persist intermediates (see caveat);
             # release exactly those — never the caller's own caches, and
-            # never frames the similarity memo retains for the application
+            # never frames the construction memo retains for the application
             # lifetime (the memo would keep handing out unpersisted frames
             # and the shared subplan would silently recompute per consumer)
-            from ts_etl_spark.operators.similarity import memoized_frame_ids
+            from ts_etl_spark.execution import memoized_frame_ids
 
             keep = memoized_frame_ids()
             for pdf in persisted:

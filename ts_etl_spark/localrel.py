@@ -25,7 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 def local_rows(spark: SparkSession, rows, schema) -> DataFrame:
     """``spark.createDataFrame(list(rows), schema)`` as a ONE-slice local
     relation (see module docstring). ``schema`` is a DDL string or
-    StructType, exactly as ``createDataFrame`` accepts."""
+    StructType, exactly as ``createDataFrame`` accepts. Rows are not
+    checked against the schema here: a malformed row fails when the
+    first action runs its task, not at construction."""
     data = rows if isinstance(rows, list) else list(rows)
     if not data:
         return spark.createDataFrame(

@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from ts_etl_spark.localrel import local_rows
 from ts_etl_spark.operators import sketches as _sketches
-from ts_etl_spark.sources.tables import load_table, spread_input
+from ts_etl_spark.sources.tables import load_table, narrow_scan, spread_input
 
 DEC = T.DecimalType(18, 2)
 
@@ -1073,8 +1073,8 @@ def q_quantiles_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile + 3×count-distinct aggregate and the register scan per
     referencing union branch."""
     import math
-    from concurrent.futures import ThreadPoolExecutor
 
+    from ts_etl_spark.execution import overlap
     from ts_etl_spark.operators.sketches import (
         CM_WIDTH,
         cm_estimate,
@@ -1143,7 +1143,7 @@ def q_quantiles_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     cents = (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
     # Round 16 (review finding): the exact-percentile/sketch aggregate
-    # split is SIZE-CONDITIONAL, mirroring the spread_input guard. On a
+    # split is SIZE-CONDITIONAL on spread_input's guard (narrow_scan). On a
     # narrow scan (fewer splits than cores — the local test files) the
     # two passes overlap in the pool and the wall is the slower one; on
     # a cluster-saturating scan the sum of scans IS the cost, so the two
@@ -1151,8 +1151,7 @@ def q_quantiles_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # countDistinct in it, so the Expand planner trap above does not
     # apply) and the input is read once. Values are identical either
     # way: every aggregate computes independently of its job-mates.
-    par = spark.sparkContext.defaultParallelism
-    narrow_scan = li.rdd.getNumPartitions() < par
+    narrow = narrow_scan(li)
     # Per-pass spread on the two passes that are both compute-heavy and
     # narrow-input-bound (A/B at sf0.1, pass alone: cm 2.3-2.5 → 0.6-1.4 s,
     # exact percentile 1.6-1.9 → 1.4 s; the sketch pass REGRESSED under a
@@ -1163,30 +1162,30 @@ def q_quantiles_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each own a single task, so without this the heavy passes pin one
     # core each while most of the machine idles.
     li_price = spread_input(li.select("l_extendedprice"), "l_extendedprice")
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        if narrow_scan:
-            f_prow = pool.submit(lambda: li_price.agg(*prow_agg).first())
-            f_srow = pool.submit(lambda: li.agg(*srow_agg).first())
+    with overlap() as submit:
+        if narrow:
+            f_prow = submit(lambda: li_price.agg(*prow_agg).first())
+            f_srow = submit(lambda: li.agg(*srow_agg).first())
         else:
-            f_prow = pool.submit(
+            f_prow = submit(
                 lambda: li.agg(*prow_agg, *srow_agg).first()
             )
             f_srow = f_prow
-        f_drow = pool.submit(
+        f_drow = submit(
             lambda: li.agg(
                 F.countDistinct("l_partkey").alias("distinct_parts"),
                 F.countDistinct("l_suppkey").alias("distinct_suppliers"),
                 F.countDistinct("l_orderkey").alias("distinct_orders"),
             ).first()
         )
-        f_hll = pool.submit(lambda: hll_registers(li, "l_partkey").collect())
-        f_cm = pool.submit(
+        f_hll = submit(lambda: hll_registers(li, "l_partkey").collect())
+        f_cm = submit(
             lambda: cm_registers(
                 spread_input(li.select("l_partkey"), "l_partkey"),
                 "l_partkey",
             ).collect()
         )
-        f_hdr = pool.submit(
+        f_hdr = submit(
             lambda: hdr_registers(
                 li.select(
                     (F.col("l_orderkey") % 2).alias("par"), cents.alias("cents")

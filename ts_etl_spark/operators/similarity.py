@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ts_etl_spark.execution import memo, overlap
 from ts_etl_spark.localrel import local_rows
 from ts_etl_spark.sources.tables import load_table, spread_input
 
@@ -81,10 +82,8 @@ def norm(a: Column) -> Column:
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single small file → one input split; spread the HOF-heavy dot-product
-    # work (same rationale as dedup.shingle_sets_df)
-    par = spark.sparkContext.defaultParallelism
-    e = load_table(spark, sf_dir, "embeddings").repartition(par, "vec_id")
+    # spread the HOF-heavy dot-product work across the cores
+    e = spread_input(load_table(spark, sf_dir, "embeddings"), "vec_id")
     v = as_double(F.col("embedding"))
     return e.select("vec_id", "label", v.alias("v"), norm(v).alias("nrm"))
 
@@ -193,8 +192,8 @@ def q_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("pos") + 1).cast("int").alias("rn"),
         )
     )
-    stats = _memo(
-        spark, sf_dir, "bm25_stats", lambda: bm25_stats(docs)
+    stats = memo(
+        spark, sf_dir, "ivf/bm25_stats", lambda: bm25_stats(docs)
     )
     scan_rank = bm25_topk(docs, stats=stats)
     bm25_arm = scan_rank.select(
@@ -214,7 +213,7 @@ def q_embed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return n_scan, diff == 0
 
-    n_scan, idx_equal = _memo(spark, sf_dir, "bm25idx_gate", _bm25idx_gate)
+    n_scan, idx_equal = memo(spark, sf_dir, "ivf/bm25idx_gate", _bm25idx_gate)
     bm25idx_arm = local_rows(
         spark,
         [("bm25idx", -1, n_scan, 1.0 if idx_equal else 0.0, 1)],
@@ -274,7 +273,7 @@ def q_embed_neardup_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate fraction is ~m²/K of all-pairs and cells stay bounded."""
     from pyspark.sql.window import Window
 
-    vecs = _memo(spark, sf_dir, "vecs", lambda: _vectors(spark, sf_dir).persist())
+    vecs = memo(spark, sf_dir, "ivf/vecs", lambda: _vectors(spark, sf_dir).persist())
     cents = vecs.filter(
         (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + BLOCK_CENTROIDS)
     ).select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"), F.col("nrm").alias("cn"))
@@ -285,8 +284,8 @@ def q_embed_neardup_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rn <= 3 rows are the pair arm's multi-probe cells, the rn == 1 slice
     # is the sem/knn arms' 1-assign frame. Memoized + persisted per
     # (application, dataset) so repeated plan builds reuse it.
-    ranked3 = _memo(
-        spark, sf_dir, "neardup_ranked3",
+    ranked3 = memo(
+        spark, sf_dir, "ivf/neardup_ranked3",
         lambda: (
             vecs.join(F.broadcast(cents), F.lit(True))
             .select("vec_id", "label", "v", "nrm", "c_id", csim.alias("csim"))
@@ -336,8 +335,8 @@ def q_embed_neardup_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned1 = ranked3.filter(F.col("rn") == 1).select(
         "vec_id", "v", "nrm", "cell"
     )
-    edges = _memo(
-        spark, sf_dir, "neardup_edges",
+    edges = memo(
+        spark, sf_dir, "ivf/neardup_edges",
         lambda: cell_edges(assigned1).persist(),
     )
     sem_arm = (
@@ -714,71 +713,6 @@ PCA_VAR_FLOOR = 0.15
 PCA_ORTHO_TOL = 1e-8
 PCA_MATCH_TOL = 1e-6
 
-#: per-(application, sf_dir) memo for the ann entry's two expensive
-#: artifacts: the persisted vector projection and the k-means-trained
-#: centroid frame. MLlib's fit is an ACTION that necessarily runs at
-#: query-construction time; without the memo every plan build (driver
-#: sweep, oracle checks, soak, bench warmup) retrained k-means and
-#: persisted a fresh vector frame that nothing released. The memo bounds
-#: both at one per dataset per application — deterministic (fixed
-#: seed/iterations), so reuse cannot change results; clearCache() only
-#: drops blocks, the memoized frames recompute lazily.
-_IVF_MEMO: dict = {}
-#: per-key in-flight builds (round 16 — the concurrent gate pool made
-#: ``_memo`` reachable from several threads; a bare check-then-set was
-#: safe only by the call-site convention that no two threads ever share
-#: a key. The lock + pending-future pair makes it safe by construction:
-#: concurrent builders of the SAME key serialize — one builds, the rest
-#: block on its future — while different keys still build concurrently).
-_MEMO_PENDING: dict = {}
-# module-level init on purpose: a lazy check-then-create of the lock
-# would itself race (two threads could each build a different lock)
-import threading as _threading  # noqa: E402
-
-_MEMO_LOCK = _threading.Lock()
-
-
-def _memo(spark: SparkSession, sf_dir: str, kind: str, build):
-    from concurrent.futures import Future
-
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    while True:
-        with _MEMO_LOCK:
-            if key in _IVF_MEMO:
-                return _IVF_MEMO[key]
-            fut = _MEMO_PENDING.get(key)
-            if fut is None:
-                fut = Future()
-                _MEMO_PENDING[key] = fut
-                break
-        # another thread is building this key — wait for it (its
-        # exception, if any, propagates to every waiter); on success
-        # loop back and read the committed value
-        fut.result()
-    try:
-        val = build()
-    except BaseException as e:
-        with _MEMO_LOCK:
-            _MEMO_PENDING.pop(key, None)
-        fut.set_exception(e)
-        raise
-    with _MEMO_LOCK:
-        _IVF_MEMO[key] = val
-        _MEMO_PENDING.pop(key, None)
-    fut.set_result(val)
-    return val
-
-
-def memoized_frame_ids() -> set[int]:
-    """``id()`` of every DataFrame the application-lifetime memo holds.
-    Cache-releasing callers that tracked persist() calls during plan
-    construction (``cli.run_explain``) MUST skip these: the memo keeps
-    returning the same frame objects and the build lambda never re-runs,
-    so unpersisting one silently downgrades every later consumer to
-    recomputing the shared subplan the memo exists to amortize."""
-    return {id(v) for v in _IVF_MEMO.values()}
-
-
 def _pca_gate_row(vecs: DataFrame) -> tuple:
     """The pca arm's driver-side evidence: fit ``pca_reduce(PCA_K)`` on
     the (vec_id, v, nrm) corpus frame, project every row, and reduce the
@@ -1152,24 +1086,22 @@ def _ann_index_gate_row(
         # leg (query + exceptAll pair + per-query counts) and the three
         # independent count reads run concurrently — same values, the
         # wall is the slowest leg instead of the sum
-        from concurrent.futures import ThreadPoolExecutor
-
         served = ann_topk_from_index(spark, d, vecs, q).persist()
         try:
-            with ThreadPoolExecutor(max_workers=4) as pool:
+            with overlap() as submit:
                 # the two independent count reads start first; the served
                 # frame is then materialized ONCE on this thread before
                 # the two legs that consume it fork — a lazy persist read
                 # by concurrent threads computes the serving plan once
                 # per thread until the blocks land (the round-15
                 # exact_full/ivfpq_res lesson, closed here too)
-                f_ncodes = pool.submit(
+                f_ncodes = submit(
                     lambda: spark.read.parquet(p["codes"])
                     .select("vec_id")
                     .distinct()
                     .count()
                 )
-                f_tot = pool.submit(
+                f_tot = submit(
                     lambda: spark.read.schema(ANN_TOTALS_SCHEMA)
                     .parquet(p["totals"])
                     .distinct()
@@ -1177,11 +1109,11 @@ def _ann_index_gate_row(
                     .first()
                 )
                 served.count()
-                f_diff = pool.submit(
+                f_diff = submit(
                     lambda: served.exceptAll(res).count()
                     + res.exceptAll(served).count()
                 )
-                f_crow = pool.submit(
+                f_crow = submit(
                     lambda: served.groupBy("q_id")
                     .agg(F.count("*").alias("c"))
                     .agg(F.min("c").alias("cmin"), F.max("c").alias("cmax"))
@@ -1291,8 +1223,8 @@ def q_embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition, replay-fold no-op, and the coverage invariant (see
     ``_ann_index_gate_row``). The -3 and -4 arms share one memoized
     ``ivf_pq_topk`` result frame."""
-    vecs = _memo(
-        spark, sf_dir, "vecs", lambda: _vectors(spark, sf_dir).persist()
+    vecs = memo(
+        spark, sf_dir, "ivf/vecs", lambda: _vectors(spark, sf_dir).persist()
     )
     cents = vecs.filter(
         (F.col("vec_id") >= 100) & (F.col("vec_id") < 100 + IVF_CENTROIDS)
@@ -1305,10 +1237,10 @@ def q_embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE brute-force pass (the entry's dominant cost) feeds both the
     # trained-recall gate and the q8 gates; memoized + persisted like
     # vecs/tcents — N_QUERIES·TOP_K rows, bounded
-    exact_full = _memo(
+    exact_full = memo(
         spark,
         sf_dir,
-        "exact",
+        "ivf/exact",
         lambda: brute_topk(vecs, q)
         .select("q_id", "neighbor_id", "cosine")
         .persist(),
@@ -1325,29 +1257,25 @@ def q_embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # composed-route frame); then the three gates that only need that
     # prefix — pq, composed-IVF-PQ, and the persisted-index gate (the
     # cold build's dominant leg: a real two-batch index fold) — run
-    # concurrently. Warm (memoized) passes are unchanged, and the
-    # concurrent _memo writes never race: every submitted kind is
-    # distinct and each key is written by exactly one thread.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as _pool:
-        f_tcents = _pool.submit(
-            _memo,
+    # concurrently. Warm (memoized) passes are unchanged.
+    with overlap() as submit:
+        f_tcents = submit(
+            memo,
             spark,
             sf_dir,
-            "tcents",
+            "ivf/tcents",
             lambda: train_ivf_centroids(
                 vecs, k=IVF_CENTROIDS, seed=IVF_TRAIN_SEED,
                 max_iter=IVF_TRAIN_ITER,
             ),
         )
-        f_pca = _pool.submit(
-            _memo, spark, sf_dir, "pca_gate", lambda: _pca_gate_row(vecs)
+        f_pca = submit(
+            memo, spark, sf_dir, "ivf/pca_gate", lambda: _pca_gate_row(vecs)
         )
         nn = vecs.filter(F.col("v").isNotNull())
-        pq_cb = _memo(spark, sf_dir, "pq_cb", lambda: pq_train(nn))
-        pq_codes = _memo(
-            spark, sf_dir, "pq_codes", lambda: pq_encode(nn, pq_cb).persist()
+        pq_cb = memo(spark, sf_dir, "ivf/pq_cb", lambda: pq_train(nn))
+        pq_codes = memo(
+            spark, sf_dir, "ivf/pq_codes", lambda: pq_encode(nn, pq_cb).persist()
         )
         # materialize the two shared persisted frames BEFORE the gates
         # fork: a lazy persist() consumed by concurrent threads computes
@@ -1358,34 +1286,34 @@ def q_embed_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # like the other construction-time frames (N_QUERIES·TOP_K rows).
         # Materialized ONCE here (count of a ≤N_QUERIES·TOP_K frame)
         # before the two consumer gates race, so neither recomputes it.
-        ivfpq_res = _memo(
+        ivfpq_res = memo(
             spark,
             sf_dir,
-            "ivfpq_res",
+            "ivf/ivfpq_res",
             lambda: (
                 lambda df: (df.count(), df)[1]
             )(ivf_pq_topk(vecs, pq_codes, pq_cb, cents, q).persist()),
         )
-        f_pq_gate = _pool.submit(
-            _memo,
+        f_pq_gate = submit(
+            memo,
             spark,
             sf_dir,
-            "pq_gate",
+            "ivf/pq_gate",
             lambda: _pq_gate_row(vecs, q, exact_full, pq_cb, pq_codes),
         )
-        f_ivfpq_gate = _pool.submit(
-            _memo,
+        f_ivfpq_gate = submit(
+            memo,
             spark,
             sf_dir,
-            "ivfpq_gate",
+            "ivf/ivfpq_gate",
             lambda: _ivfpq_gate_row(
                 vecs, q, cents, seed_topk, pq_cb, pq_codes, res=ivfpq_res
             ),
         )
-        n_idx, ki_meas, ai_x_ok, ai_r_ok, ai_c_ok = _memo(
+        n_idx, ki_meas, ai_x_ok, ai_r_ok, ai_c_ok = memo(
             spark,
             sf_dir,
-            "ann_idx_gate",
+            "ivf/ann_idx_gate",
             lambda: _ann_index_gate_row(spark, vecs, q, cents, pq_cb, ivfpq_res),
         )
         n_codes, m_meas, pqr_ok, pqe_ok, pqm_ok = f_pq_gate.result()
@@ -1888,8 +1816,6 @@ def pq_train(
             spark, rows, "j INT, code INT, cent ARRAY<DOUBLE>"
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -1912,8 +1838,8 @@ def pq_train(
         ]
 
     try:
-        with ThreadPoolExecutor(max_workers=m) as pool:
-            parts = list(pool.map(fit, range(m)))
+        with overlap() as submit:
+            parts = [f.result() for f in [submit(fit, j) for j in range(m)]]
     finally:
         train.unpersist()
     rows = [r for part in parts for r in part]

@@ -40,7 +40,7 @@ from ts_etl_spark.operators.dedup import JACCARD_THRESHOLD, minhash_lsh_pairs
 from ts_etl_spark.operators.skew import bucketed_running_sum
 from ts_etl_spark.operators.textops import _metric_cols, _signature_cols
 from ts_etl_spark.sinks.table_sink import write_parquet
-from ts_etl_spark.sources.tables import load_table
+from ts_etl_spark.sources.tables import load_table, spread_input
 
 
 def curate_documents(
@@ -134,12 +134,13 @@ def curate_documents(
     """
     # ONE cached scan of documents feeds both the metric projection and the
     # LSH near-dup pass (the pipeline's two text consumers) — at 100 TB you
-    # never want the corpus read and re-tokenized twice.  The repartition
-    # spreads shingling across the cluster on single-split local files (AQE
-    # coalesces it away at real scale), and the cache holds only the skinny
+    # never want the corpus read and re-tokenized twice.  The scan is
+    # spread (``spread_input``) so paragraph dedup, masking and shingling
+    # run across the cores, and the cache holds only the skinny
     # (doc_id, text) projection.
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    docs = spread_input(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
+    )
     if paragraph_dedup is not None:
         from ts_etl_spark.operators.paragraphs import dedup_paragraphs
 
@@ -162,7 +163,7 @@ def curate_documents(
         # masking reads its input several times (winnow selection, the
         # candidate gram phase, the final rebuild join) — cache the raw
         # text projection so those are memory reads, not corpus rescans
-        raw = docs.repartition(par, "doc_id").persist()
+        raw = docs.persist()
         mask_caches: list[DataFrame] = []
         masked = mask_repeated_spans(
             raw, k=k_, w=w_, min_docs=m_, persisted=mask_caches
@@ -238,7 +239,7 @@ def curate_documents(
         for df in mask_caches:
             df.unpersist()
     else:
-        docs = docs.repartition(par, "doc_id").persist()
+        docs = docs.persist()
     if persisted is not None and not substring_mask:
         # the masked path's docs is a checkpoint, not a cache — nothing
         # for the caller to release (ContextCleaner owns the blocks)

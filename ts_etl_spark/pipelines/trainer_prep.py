@@ -66,13 +66,14 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ts_etl_spark.execution import memo, overlap
 from ts_etl_spark.localrel import local_rows
 from ts_etl_spark.operators.bpe import WORD_PAT, bpe_encode, learn_bpe
 from ts_etl_spark.operators.chunking import chunk_documents
 from ts_etl_spark.operators.packing import pack_sequences
 from ts_etl_spark.operators.textops import _metric_cols
 from ts_etl_spark.pipelines.sampling import assign_splits
-from ts_etl_spark.sources.tables import load_table
+from ts_etl_spark.sources.tables import load_table, spread_input
 
 CHUNK_CHARS = 128
 CHUNK_OVERLAP = 32
@@ -88,15 +89,6 @@ N_SHARDS = 16
 #: the two temperature points the mix arm pins: natural proportions and
 #: the multilingual tail-up-weighting midpoint
 MIX_TAUS = (1.0, 0.5)
-
-
-#: per-(application, sf_dir) memo of the learned BPE merge table — the
-#: driver's repeated plan builds (sweep, oracle compare, soak, bench
-#: samples) otherwise re-pay the corpus word-frequency pass plus the
-#: merge loop at EVERY construction; the merges are deterministic per
-#: corpus, so this is the ``similarity._IVF_MEMO`` pattern, but plain
-#: driver data — nothing to persist or release.
-_BPE_MERGES_MEMO: dict = {}
 
 
 def q_trainer_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -125,8 +117,6 @@ def q_trainer_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cold, of the learn_bpe pass). It runs on a background thread while
     # the main thread builds everything else; the futures join before
     # the final union, so the returned frame is identical.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _leak_arms():
         from ts_etl_spark.operators.dedup import minhash_lsh_pairs
         from ts_etl_spark.pipelines.leakage import (
@@ -137,12 +127,9 @@ def q_trainer_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # one LSH pass feeds the audit AND the component splitter; the
         # band join is the arm's dominant cost, so share it across
-        # consumers. Repartition first: the local test file is a single
-        # input split and the shingle/signature projection is the
-        # compute-heavy step (the shingle_sets_df rationale — AQE
-        # coalesces this away at real scale)
-        par = spark.sparkContext.defaultParallelism
-        ldocs = docs.repartition(par, "doc_id")
+        # consumers. Spread first: the shingle/signature projection is
+        # the compute-heavy step
+        ldocs = spread_input(docs, "doc_id")
         near = minhash_lsh_pairs(ldocs).persist()
         audit = split_leakage_audit(
             ldocs, weights=SPLIT_WEIGHTS, key_cols=["doc_id"],
@@ -179,184 +166,183 @@ def q_trainer_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return leak, leak_safe
 
-    _pool = ThreadPoolExecutor(max_workers=1)
-    _f_leak = _pool.submit(_leak_arms)
+    with overlap() as submit:
+        f_leak = submit(_leak_arms)
 
-    chunks = chunk_documents(docs, CHUNK_CHARS, CHUNK_OVERLAP).select(
-        F.lit("chunk").alias("op"),
-        F.col("doc_id").alias("k1"),
-        F.col("chunk_idx").cast("bigint").alias("k2"),
-        F.md5("chunk").alias("s"),
-        F.col("char_start").cast("double").alias("v"),
-        t.alias("ok"),
-    )
-
-    splits = assign_splits(docs, SPLIT_WEIGHTS, ["doc_id"], seed="split").select(
-        F.lit("split").alias("op"),
-        F.col("doc_id").alias("k1"),
-        nb.alias("k2"),
-        F.col("split").alias("s"),
-        nd.alias("v"),
-        t.alias("ok"),
-    )
-
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    merges = _BPE_MERGES_MEMO.get(memo_key)
-    if merges is None:
-        merges = learn_bpe(docs, n_merges=BPE_MERGES, min_freq=2)
-        _BPE_MERGES_MEMO[memo_key] = merges
-    words = F.regexp_extract_all(F.lower("text"), F.lit(WORD_PAT), 0)
-    enc = bpe_encode(docs, merges).join(
-        docs.select(
-            "doc_id",
-            F.array_join(words, "").alias("__wcat"),
-            F.size(words).alias("__n_words"),
-        ),
-        "doc_id",
-    )
-    bpe = enc.select(
-        F.lit("bpe").alias("op"),
-        F.col("doc_id").alias("k1"),
-        nb.alias("k2"),
-        ns.alias("s"),
-        F.col("__n_words").cast("double").alias("v"),
-        (
-            (F.array_join("tokens", "") == F.col("__wcat"))
-            & (F.col("n_tokens") >= F.col("__n_words"))
-            & (F.col("n_tokens") <= F.length("__wcat"))
-        ).alias("ok"),
-    )
-
-    tok = load_table(spark, sf_dir, "documents").select(
-        "doc_id", *_metric_cols()
-    ).select("doc_id", F.col("n_bpe_tokens").alias("n_tokens"))
-    packed = pack_sequences(tok, PACK_MAX_TOKENS)
-    cap = F.lit(PACK_MAX_TOKENS)
-    row_agg = packed.agg(
-        F.count("*").alias("n_rows"),
-        F.count_distinct("doc_id").alias("n_docs"),
-        F.min(F.col("oversize") == (F.col("n_tokens") > cap)).alias("flags_ok"),
-        F.sum(F.when(~F.col("oversize"), F.col("n_tokens"))).alias("norm_tokens"),
-        F.count_distinct("pack_group").alias("n_groups"),
-    )
-    bins = packed.groupBy("pack_group", "bin_idx").agg(
-        F.sum("n_tokens").alias("tokens"),
-        F.count("*").alias("docs"),
-        F.max(F.col("oversize").cast("int")).alias("has_over"),
-    )
-    bin_agg = bins.agg(
-        F.max(F.when(F.col("has_over") == 0, F.col("tokens"))).alias(
-            "max_norm_tokens"
-        ),
-        F.max(F.when(F.col("has_over") == 1, F.col("docs"))).alias(
-            "max_over_docs"
-        ),
-        F.sum(F.when(F.col("has_over") == 0, 1).otherwise(0)).alias(
-            "n_norm_bins"
-        ),
-    )
-    combined = row_agg.join(F.broadcast(bin_agg), F.lit(True))
-    lower = F.ceil(F.col("norm_tokens") / cap)
-    pack_entries = [
-        F.struct(
-            F.lit("total_docs").alias("s"),
-            F.col("n_rows").cast("double").alias("v"),
-            (F.col("n_rows") == F.col("n_docs")).alias("ok"),
-        ),
-        F.struct(
-            F.lit("capacity_ok").alias("s"),
-            nd.alias("v"),
-            F.coalesce(F.col("max_norm_tokens") <= cap, t).alias("ok"),
-        ),
-        F.struct(
-            F.lit("oversize_ok").alias("s"),
-            nd.alias("v"),
-            (
-                F.col("flags_ok")
-                & F.coalesce(F.col("max_over_docs") <= 1, t)
-            ).alias("ok"),
-        ),
-        F.struct(
-            F.lit("waste_ok").alias("s"),
-            nd.alias("v"),
-            # first-fit half-full theorem: within a group at most ONE
-            # non-oversize bin is <= half full (a second one's first item
-            # would have fit in the first), so bins <= 2*tokens/cap + 1
-            # per group. 11/9*OPT is tighter but OPT is unobservable —
-            # substituting the token lower bound for OPT false-fails on
-            # corpora of mostly ~cap/2+1-token documents (OPT ~ 2*lower).
-            F.coalesce(
-                F.col("n_norm_bins") <= 2 * lower + F.col("n_groups"),
-                t,
-            ).alias("ok"),
-        ),
-    ]
-    pack = combined.select(
-        F.explode(F.array(*pack_entries)).alias("e")
-    ).select(
-        F.lit("pack").alias("op"),
-        nb.alias("k1"),
-        nb.alias("k2"),
-        F.col("e.s").alias("s"),
-        F.col("e.v").alias("v"),
-        F.col("e.ok").alias("ok"),
-    )
-
-    from ts_etl_spark.pipelines.sampling import temperature_shares
-    from ts_etl_spark.pipelines.shards import assign_shards
-
-    shards = (
-        assign_shards(docs, N_SHARDS, ["doc_id"], seed="shard")
-        .groupBy("shard")
-        .agg(F.count("*").alias("__n"))
-        .select(
-            F.lit("shard").alias("op"),
-            F.col("shard").cast("bigint").alias("k1"),
-            nb.alias("k2"),
-            ns.alias("s"),
-            F.col("__n").cast("double").alias("v"),
+        chunks = chunk_documents(docs, CHUNK_CHARS, CHUNK_OVERLAP).select(
+            F.lit("chunk").alias("op"),
+            F.col("doc_id").alias("k1"),
+            F.col("chunk_idx").cast("bigint").alias("k2"),
+            F.md5("chunk").alias("s"),
+            F.col("char_start").cast("double").alias("v"),
             t.alias("ok"),
         )
-    )
 
-    # temperature mixing: the share math is DRIVER arithmetic over the
-    # #strata-bounded per-language counts (the library contract —
-    # ``temperature_shares`` feeds ``mix_to_target``), so this arm runs
-    # one bounded groupBy/collect at CONSTRUCTION time (same class as
-    # the CLI summary collects). ONE float path with the oracle: keys
-    # are sorted before the call so Python's sum() is a left fold in
-    # lang order (the oracle folds the same order via list_reduce), the
-    # c**tau numerators share this host's libm pow, and rounding is
-    # floor(x*1e6 + 0.5) on both sides — Python round() is banker's,
-    # DuckDB ROUND half-away-from-zero, and the two diverge at exact
-    # half-ulp boundaries.
-    counts = dict(
-        sorted(
-            (r["lang"], r["n"])
-            for r in load_table(spark, sf_dir, "documents")
-            .groupBy("lang")
-            .agg(F.count("*").alias("n"))
-            .collect()
+        splits = assign_splits(docs, SPLIT_WEIGHTS, ["doc_id"], seed="split").select(
+            F.lit("split").alias("op"),
+            F.col("doc_id").alias("k1"),
+            nb.alias("k2"),
+            F.col("split").alias("s"),
+            nd.alias("v"),
+            t.alias("ok"),
         )
-    )
-    mix_rows = [
-        (f"tau{tau}|{lang}", math.floor(share * 1e6 + 0.5) / 1e6)
-        for tau in MIX_TAUS
-        for lang, share in temperature_shares(counts, tau).items()
-    ]
-    mix = local_rows(spark, mix_rows, "s STRING, v DOUBLE").select(
-        F.lit("mix").alias("op"),
-        nb.alias("k1"),
-        nb.alias("k2"),
-        F.col("s"),
-        F.col("v"),
-        t.alias("ok"),
-    )
 
-    try:
-        leak, leak_safe = _f_leak.result()
-    finally:
-        _pool.shutdown()
+        # the merge table is memoized per (application, sf_dir): repeated
+        # plan builds (sweep, oracle compare, soak, bench samples) would
+        # otherwise re-pay the corpus word-frequency pass plus the merge loop
+        merges = memo(
+            spark, sf_dir, "bpe/merges",
+            lambda: learn_bpe(docs, n_merges=BPE_MERGES, min_freq=2),
+        )
+        words = F.regexp_extract_all(F.lower("text"), F.lit(WORD_PAT), 0)
+        enc = bpe_encode(docs, merges).join(
+            docs.select(
+                "doc_id",
+                F.array_join(words, "").alias("__wcat"),
+                F.size(words).alias("__n_words"),
+            ),
+            "doc_id",
+        )
+        bpe = enc.select(
+            F.lit("bpe").alias("op"),
+            F.col("doc_id").alias("k1"),
+            nb.alias("k2"),
+            ns.alias("s"),
+            F.col("__n_words").cast("double").alias("v"),
+            (
+                (F.array_join("tokens", "") == F.col("__wcat"))
+                & (F.col("n_tokens") >= F.col("__n_words"))
+                & (F.col("n_tokens") <= F.length("__wcat"))
+            ).alias("ok"),
+        )
+
+        tok = load_table(spark, sf_dir, "documents").select(
+            "doc_id", *_metric_cols()
+        ).select("doc_id", F.col("n_bpe_tokens").alias("n_tokens"))
+        packed = pack_sequences(tok, PACK_MAX_TOKENS)
+        cap = F.lit(PACK_MAX_TOKENS)
+        row_agg = packed.agg(
+            F.count("*").alias("n_rows"),
+            F.count_distinct("doc_id").alias("n_docs"),
+            F.min(F.col("oversize") == (F.col("n_tokens") > cap)).alias("flags_ok"),
+            F.sum(F.when(~F.col("oversize"), F.col("n_tokens"))).alias("norm_tokens"),
+            F.count_distinct("pack_group").alias("n_groups"),
+        )
+        bins = packed.groupBy("pack_group", "bin_idx").agg(
+            F.sum("n_tokens").alias("tokens"),
+            F.count("*").alias("docs"),
+            F.max(F.col("oversize").cast("int")).alias("has_over"),
+        )
+        bin_agg = bins.agg(
+            F.max(F.when(F.col("has_over") == 0, F.col("tokens"))).alias(
+                "max_norm_tokens"
+            ),
+            F.max(F.when(F.col("has_over") == 1, F.col("docs"))).alias(
+                "max_over_docs"
+            ),
+            F.sum(F.when(F.col("has_over") == 0, 1).otherwise(0)).alias(
+                "n_norm_bins"
+            ),
+        )
+        combined = row_agg.join(F.broadcast(bin_agg), F.lit(True))
+        lower = F.ceil(F.col("norm_tokens") / cap)
+        pack_entries = [
+            F.struct(
+                F.lit("total_docs").alias("s"),
+                F.col("n_rows").cast("double").alias("v"),
+                (F.col("n_rows") == F.col("n_docs")).alias("ok"),
+            ),
+            F.struct(
+                F.lit("capacity_ok").alias("s"),
+                nd.alias("v"),
+                F.coalesce(F.col("max_norm_tokens") <= cap, t).alias("ok"),
+            ),
+            F.struct(
+                F.lit("oversize_ok").alias("s"),
+                nd.alias("v"),
+                (
+                    F.col("flags_ok")
+                    & F.coalesce(F.col("max_over_docs") <= 1, t)
+                ).alias("ok"),
+            ),
+            F.struct(
+                F.lit("waste_ok").alias("s"),
+                nd.alias("v"),
+                # first-fit half-full theorem: within a group at most ONE
+                # non-oversize bin is <= half full (a second one's first item
+                # would have fit in the first), so bins <= 2*tokens/cap + 1
+                # per group. 11/9*OPT is tighter but OPT is unobservable —
+                # substituting the token lower bound for OPT false-fails on
+                # corpora of mostly ~cap/2+1-token documents (OPT ~ 2*lower).
+                F.coalesce(
+                    F.col("n_norm_bins") <= 2 * lower + F.col("n_groups"),
+                    t,
+                ).alias("ok"),
+            ),
+        ]
+        pack = combined.select(
+            F.explode(F.array(*pack_entries)).alias("e")
+        ).select(
+            F.lit("pack").alias("op"),
+            nb.alias("k1"),
+            nb.alias("k2"),
+            F.col("e.s").alias("s"),
+            F.col("e.v").alias("v"),
+            F.col("e.ok").alias("ok"),
+        )
+
+        from ts_etl_spark.pipelines.sampling import temperature_shares
+        from ts_etl_spark.pipelines.shards import assign_shards
+
+        shards = (
+            assign_shards(docs, N_SHARDS, ["doc_id"], seed="shard")
+            .groupBy("shard")
+            .agg(F.count("*").alias("__n"))
+            .select(
+                F.lit("shard").alias("op"),
+                F.col("shard").cast("bigint").alias("k1"),
+                nb.alias("k2"),
+                ns.alias("s"),
+                F.col("__n").cast("double").alias("v"),
+                t.alias("ok"),
+            )
+        )
+
+        # temperature mixing: the share math is DRIVER arithmetic over the
+        # #strata-bounded per-language counts (the library contract —
+        # ``temperature_shares`` feeds ``mix_to_target``), so this arm runs
+        # one bounded groupBy/collect at CONSTRUCTION time (same class as
+        # the CLI summary collects). ONE float path with the oracle: keys
+        # are sorted before the call so Python's sum() is a left fold in
+        # lang order (the oracle folds the same order via list_reduce), the
+        # c**tau numerators share this host's libm pow, and rounding is
+        # floor(x*1e6 + 0.5) on both sides — Python round() is banker's,
+        # DuckDB ROUND half-away-from-zero, and the two diverge at exact
+        # half-ulp boundaries.
+        counts = dict(
+            sorted(
+                (r["lang"], r["n"])
+                for r in load_table(spark, sf_dir, "documents")
+                .groupBy("lang")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            )
+        )
+        mix_rows = [
+            (f"tau{tau}|{lang}", math.floor(share * 1e6 + 0.5) / 1e6)
+            for tau in MIX_TAUS
+            for lang, share in temperature_shares(counts, tau).items()
+        ]
+        mix = local_rows(spark, mix_rows, "s STRING, v DOUBLE").select(
+            F.lit("mix").alias("op"),
+            nb.alias("k1"),
+            nb.alias("k2"),
+            F.col("s"),
+            F.col("v"),
+            t.alias("ok"),
+        )
+
+        leak, leak_safe = f_leak.result()
     return (
         chunks.unionByName(splits)
         .unionByName(bpe)

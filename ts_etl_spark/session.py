@@ -23,6 +23,12 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _half_of_ram() -> str:
+    """Default driver heap: half the machine's physical memory, so the
+    JVM's own heap limit trips before the kernel's OOM killer does."""
+    return f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') >> 21}m"
+
+
 def get_spark(
     app_name: str = "ts-etl-spark",
     master: str | None = None,
@@ -55,7 +61,10 @@ def get_spark(
         # application-side threshold keeps it dormant on local test data and
         # active exactly where it pays — multi-TB fact scans.
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _half_of_ram()),
+        )
         # static conf: the default 100-entry Janino class cache thrashes when
         # a session runs the whole query surface back-to-back (each query
         # compiles several whole-stage-codegen classes); recompilation showed

@@ -14,16 +14,28 @@ from pyspark.sql import functions as F
 from ts_etl_spark.schema import SCALE_TABLES
 
 
+def narrow_scan(df: DataFrame) -> bool:
+    """True when the scan ``df`` yields fewer partitions than the
+    session's ``defaultParallelism`` — the one scan-width guard. Call it
+    on a scan (plus projections/filters), never on a frame with an
+    exchange: ``df.rdd`` on an adaptive plan runs its shuffle stages."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.rdd.getNumPartitions() < par
+
+
 def spread_input(df: DataFrame, *keys: str) -> DataFrame:
     """Hash-spread a narrow scan across the session's cores — ONLY when
-    the scan yields fewer partitions than ``defaultParallelism``.
+    the scan yields fewer partitions than ``defaultParallelism``
+    (``narrow_scan``). This is the engine's one scan spread.
 
     The driver's test tables are single-row-group parquet files, so a
     scan is ONE task no matter the core count and every compute-heavy
     per-row projection (regex metrics, tokenization, value-buffering
     percentiles) runs on one core of 32 — guide §2.5's "one huge
     unsplittable file" case, whose prescription is to repartition right
-    after the read. The guard makes it scale-adaptive: a production
+    after the read. The spread is a ``REPARTITION_BY_NUM`` exchange,
+which AQE never coalesces away, so the guard is what makes it
+scale-adaptive: a production
     table scan has at least as many splits as cores, the condition never
     fires, and the published shuffle-free plan shapes are unchanged —
     this is a small-input ramp, not a cluster tuning knob. Apply it ONLY
@@ -35,11 +47,9 @@ def spread_input(df: DataFrame, *keys: str) -> DataFrame:
     the exchange per branch (measured: corpus_report 3.4s → 5.9s with a
     blanket spread at load time — so this is deliberately NOT inside
     ``load_table``)."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= par:
+    if not narrow_scan(df):
         return df
-    return df.repartition(par, *keys)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

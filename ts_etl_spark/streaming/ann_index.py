@@ -4,7 +4,7 @@ twin of the BM25 postings lexicon (``streaming.ingest``'s
 
 Before this module, every vector-serving artifact — PQ codebooks, the
 encoded corpus, IVF cell assignments — was computed per session and
-memoized in memory (``operators.similarity._IVF_MEMO``): at 100 TB that
+memoized in memory (``execution.memo``): at 100 TB that
 is a full-corpus encode per application start. Here they are INGEST
 STATE TABLES maintained per batch under the same replay protocol the
 lexicon uses, so ``ann_topk_from_index`` answers queries from persisted
@@ -82,6 +82,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ts_etl_spark.execution import overlap
 from ts_etl_spark.fs import delete_dir, path_exists
 from ts_etl_spark.localrel import local_rows
 
@@ -236,21 +237,19 @@ def train_ann_model(
     # independent (guide §2.6 — overlap independent driver actions); all
     # four complete before meta commits, so the totals-last discipline is
     # untouched
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_cw = pool.submit(
+    with overlap() as submit:
+        f_cw = submit(
             lambda: cent_rows.write.mode("append").parquet(p["cents"])
         )
-        f_bw = pool.submit(
+        f_bw = submit(
             lambda: cb_rows.write.mode("append").parquet(p["codebooks"])
         )
-        f_dims = pool.submit(
+        f_dims = submit(
             lambda: cents.agg(
                 F.count(F.lit(1)).alias("nc"), F.min(F.size("cv")).alias("d")
             ).first()
         )
-        f_m = pool.submit(
+        f_m = submit(
             lambda: codebooks.agg((F.max("j") + 1).alias("m")).first()
         )
         f_cw.result()
@@ -360,10 +359,8 @@ def _append_codes(
         # running back-to-back. All three complete before the qdrift
         # write starts, so the crash ladder's write ORDER (codes →
         # qdrift → totals) is exactly as before.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_stats = pool.submit(
+        with overlap() as submit:
+            f_stats = submit(
                 lambda: rows.agg(
                     F.count(F.lit(1)).alias("nv"),
                     F.avg(
@@ -374,8 +371,8 @@ def _append_codes(
                     ).alias("e"),
                 ).first()
             )
-            f_docs = pool.submit(vecs.count)
-            f_codes = pool.submit(
+            f_docs = submit(vecs.count)
+            f_codes = submit(
                 lambda: (
                     rows.repartition(n_cells, "cell")
                     .sortWithinPartitions("cell", "vec_id")
