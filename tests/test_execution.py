@@ -170,12 +170,13 @@ TRIPWIRES = {
         "sources/tables.py",
     ),
     ".repartition(par": (re.compile(r"\.repartition\(par\b"), "sources/tables.py"),
+    "spark.stop()": (re.compile(r"spark\.stop\(\)"), "session.py"),
 }
 
 
 def test_execution_mechanisms_live_in_one_home():
-    """Thread pools, construction memos and scan-width guards each have
-    one home; a copy anywhere else fails here."""
+    """Thread pools, construction memos, scan-width guards and session
+    stops each have one home; a copy anywhere else fails here."""
     stray = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()

@@ -64,6 +64,20 @@ def test_cli_profile_streams_jsonl(spark, tmp_path, capsys):
     assert rows_metric and int(rows_metric[0]["value"]) == 5
 
 
+def test_cli_leaves_a_running_session_live(spark, sf_smoke):
+    """A CLI call without ``spark`` in a process that already runs a
+    session reuses that session and must not stop it."""
+    from ts_etl_spark import cli
+
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert cli.main(["profile", f"{sf_smoke}/region.parquet"]) == 0
+    finally:
+        # get_spark re-applies its runtime conf to a reused session
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    assert spark.range(3).count() == 3
+
+
 def test_compaction_raises_on_empty_input(spark, tmp_path):
     """Zero parquet bytes (missing dir, or dir with no parquet) raises —
     on a non-local URI a silently-empty os.walk used to compute total=0."""

@@ -434,15 +434,15 @@ def test_cli_curate_accepts_new_flags(spark, sf_smoke, tmp_path, monkeypatch):
         return {}
 
     monkeypatch.setattr(cli, "run_curate", fake_run_curate)
-    rc = cli._curate_main(
-        [sf_smoke, str(tmp_path / "o"), "--substring-mask", "5,8,3",
+    rc = cli.main(
+        ["curate", sf_smoke, str(tmp_path / "o"), "--substring-mask", "5,8,3",
          "--domain-cap", "7"]
     )
     assert rc == 0
     assert seen["substring_mask"] == (5, 8, 3)
     assert seen["domain_cap_n"] == 7
     seen.clear()
-    rc = cli._curate_main([sf_smoke, str(tmp_path / "o2"), "--substring-mask"])
+    rc = cli.main(["curate", sf_smoke, str(tmp_path / "o2"), "--substring-mask"])
     assert rc == 0 and seen["substring_mask"] is True
 
 

@@ -19,7 +19,7 @@ import tempfile
 from contextlib import contextmanager
 
 from ts_etl_spark import sinks, sources
-from ts_etl_spark.session import get_spark
+from ts_etl_spark.session import owned_session
 from ts_etl_spark.sources.csv_source import validate_csv_text
 
 
@@ -37,44 +37,21 @@ def run_conversion(
     csv_delimiter: str = ",",
     spark=None,
 ) -> None:
-    """Programmatic engine API (reference runConversion, index.ts:42-103)."""
-    input_type = input_type.lower()
-    output_type = output_type.lower()
-    if input_type not in sources.SOURCES:
-        raise ValueError(f"Invalid input type: {input_type}")
-    sink = sinks.create_sink(output_type)
-
-    text = in_bytes.decode("latin1")
-    if input_type == "csv":
-        validate_csv_text(text, csv_delimiter)
-
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-cli")
+    """Programmatic engine API (reference runConversion, index.ts:42-103):
+    the stdin blob goes to a temp file, which ``run_conversion_path``
+    converts."""
     tmp = tempfile.NamedTemporaryFile(
-        mode="wb", suffix=f".{input_type}", delete=False
+        mode="wb", suffix=f".{input_type.lower()}", delete=False
     )
     try:
         tmp.write(in_bytes)
         tmp.close()
         debug_log(f"materialized stdin -> {tmp.name}")
-        _convert_path(
-            input_type, output_type, tmp.name, out, csv_delimiter, spark, sink
+        run_conversion_path(
+            input_type, output_type, tmp.name, out, csv_delimiter, spark
         )
     finally:
         os.unlink(tmp.name)
-        if own_session:
-            spark.stop()
-
-
-def _convert_path(
-    input_type: str, output_type: str, path: str, out, csv_delimiter, spark, sink
-) -> None:
-    kwargs = {"delimiter": csv_delimiter} if input_type == "csv" else {}
-    df = sources.create_source(input_type, spark, path, **kwargs)
-    print(f"Starting conversion: {input_type} -> {output_type}", file=sys.stderr)
-    sink(df, out)
-    print("Conversion completed successfully.", file=sys.stderr)
 
 
 def run_conversion_path(
@@ -95,19 +72,16 @@ def run_conversion_path(
     if input_type not in sources.SOURCES:
         raise ValueError(f"Invalid input type: {input_type}")
     sink = sinks.create_sink(output_type)
+    kwargs = {}
     if input_type == "csv":
         with open(in_path, "rb") as f:
             validate_csv_text(f.read().decode("latin1"), csv_delimiter)
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-cli")
-    try:
-        _convert_path(
-            input_type, output_type, in_path, out, csv_delimiter, spark, sink
-        )
-    finally:
-        if own_session:
-            spark.stop()
+        kwargs = {"delimiter": csv_delimiter}
+    with owned_session(spark, "ts-etl-spark-cli") as spark:
+        df = sources.create_source(input_type, spark, in_path, **kwargs)
+        print(f"Starting conversion: {input_type} -> {output_type}", file=sys.stderr)
+        sink(df, out)
+        print("Conversion completed successfully.", file=sys.stderr)
 
 
 def run_curate(
@@ -136,57 +110,53 @@ def run_curate(
     from ts_etl_spark.operators.dedup import JACCARD_THRESHOLD
     from ts_etl_spark.pipelines import curate_documents, write_curated
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-curate")
     caches: list = []
-    try:
-        out = curate_documents(
-            spark,
-            sf_dir,
-            languages=languages,
-            jaccard_threshold=jaccard if jaccard is not None else JACCARD_THRESHOLD,
-            token_budget=token_budget,
-            persisted=caches,
-            clf_threshold=clf_threshold,
-            paragraph_dedup=paragraph_dedup,
-            blocklist=blocklist,
-            blocklist_max_frac=blocklist_max_frac,
-            substring_mask=substring_mask,
-            domain_cap_n=domain_cap_n,
-        ).persist()
-        caches.append(out)
-        # counts from the PERSISTED pre-join frame: the pack join below is
-        # 1:1 and cannot change drop_reason counts, while counting through
-        # it would execute the whole unpersisted packing stage once for
-        # the collect and again for the write
-        counts = {
-            (r["drop_reason"] or "kept"): r["count"]
-            for r in out.groupBy("drop_reason").count().collect()
-        }
-        if pack_tokens is not None:
-            from ts_etl_spark.operators.packing import pack_sequences
+    with owned_session(spark, "ts-etl-spark-curate") as spark:
+        try:
+            out = curate_documents(
+                spark,
+                sf_dir,
+                languages=languages,
+                jaccard_threshold=jaccard if jaccard is not None else JACCARD_THRESHOLD,
+                token_budget=token_budget,
+                persisted=caches,
+                clf_threshold=clf_threshold,
+                paragraph_dedup=paragraph_dedup,
+                blocklist=blocklist,
+                blocklist_max_frac=blocklist_max_frac,
+                substring_mask=substring_mask,
+                domain_cap_n=domain_cap_n,
+            ).persist()
+            caches.append(out)
+            # counts from the PERSISTED pre-join frame: the pack join below is
+            # 1:1 and cannot change drop_reason counts, while counting through
+            # it would execute the whole unpersisted packing stage once for
+            # the collect and again for the write
+            counts = {
+                (r["drop_reason"] or "kept"): r["count"]
+                for r in out.groupBy("drop_reason").count().collect()
+            }
+            if pack_tokens is not None:
+                from ts_etl_spark.operators.packing import pack_sequences
 
-            bins = pack_sequences(
-                out.filter(F.col("kept")).select("doc_id", "n_bpe_tokens"),
-                pack_tokens,
-                tokens_col="n_bpe_tokens",
-            ).select("doc_id", "pack_group", "bin_idx")
-            out = out.join(bins, "doc_id", "left")
-        for stage, n in sorted(counts.items()):
-            print(f"curate: {stage} = {n}", file=sys.stderr)
-        write_curated(out, out_dir)
-        return counts
-    finally:
-        # release in finally: a failed write must not leak corpus-scale
-        # caches into a long-lived caller-provided session
-        for frame in caches:
-            frame.unpersist()
-        if own_session:
-            spark.stop()
+                bins = pack_sequences(
+                    out.filter(F.col("kept")).select("doc_id", "n_bpe_tokens"),
+                    pack_tokens,
+                    tokens_col="n_bpe_tokens",
+                ).select("doc_id", "pack_group", "bin_idx")
+                out = out.join(bins, "doc_id", "left")
+            for stage, n in sorted(counts.items()):
+                print(f"curate: {stage} = {n}", file=sys.stderr)
+            write_curated(out, out_dir)
+            return counts
+        finally:
+            # release in finally: a failed write must not leak corpus-scale
+            # caches into a long-lived session
+            for frame in caches:
+                frame.unpersist()
 
 
-def _curate_main(argv: list[str]) -> int:
+def _curate_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark curate",
         description="Curate the documents table into a training corpus.",
@@ -241,37 +211,34 @@ def _curate_main(argv: list[str]) -> int:
         help="keep at most N documents per source (longest first); excess "
         "drops with reason 'domain_cap'",
     )
-    args = parser.parse_args(argv)
-    langs = args.languages.split(",") if args.languages else None
-    try:
-        run_curate(
-            args.sf_dir,
-            args.out_dir,
-            languages=langs,
-            token_budget=args.budget,
-            jaccard=args.jaccard,
-            pack_tokens=args.pack_tokens,
-            clf_threshold=args.clf_threshold,
-            paragraph_dedup=args.paragraph_dedup,
-            blocklist=(
-                [t.strip() for t in args.blocklist.split(",") if t.strip()]
-                if args.blocklist
-                else None
-            ),
-            blocklist_max_frac=args.blocklist_max_frac,
-            substring_mask=(
-                True
-                if args.substring_mask == "default"
-                else tuple(int(x) for x in args.substring_mask.split(","))
-                if args.substring_mask
-                else None
-            ),
-            domain_cap_n=args.domain_cap,
-        )
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during curation: {exc}", file=sys.stderr)
-        return 1
-    return 0
+    return parser
+
+
+def _curate(args: argparse.Namespace) -> None:
+    run_curate(
+        args.sf_dir,
+        args.out_dir,
+        languages=args.languages.split(",") if args.languages else None,
+        token_budget=args.budget,
+        jaccard=args.jaccard,
+        pack_tokens=args.pack_tokens,
+        clf_threshold=args.clf_threshold,
+        paragraph_dedup=args.paragraph_dedup,
+        blocklist=(
+            [t.strip() for t in args.blocklist.split(",") if t.strip()]
+            if args.blocklist
+            else None
+        ),
+        blocklist_max_frac=args.blocklist_max_frac,
+        substring_mask=(
+            True
+            if args.substring_mask == "default"
+            else tuple(int(x) for x in args.substring_mask.split(","))
+            if args.substring_mask
+            else None
+        ),
+        domain_cap_n=args.domain_cap,
+    )
 
 
 def run_pack(
@@ -290,10 +257,7 @@ def run_pack(
 
     from ts_etl_spark.operators.packing import pack_sequences
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-pack")
-    try:
+    with owned_session(spark, "ts-etl-spark-pack") as spark:
         df = spark.read.parquet(in_dir)
         if tokens_col not in df.columns:
             from ts_etl_spark.operators.textops import BPE_PAT
@@ -314,9 +278,6 @@ def run_pack(
         counts = {"docs": stats["docs"], "bins": stats["bins"]}
         print(f"pack: {counts['docs']} docs into {counts['bins']} bins", file=sys.stderr)
         return counts
-    finally:
-        if own_session:
-            spark.stop()
 
 
 def run_explain(
@@ -337,8 +298,7 @@ def run_explain(
     aggregates eagerly and the printed plan covers only the
     local-relation tail), and some persist intermediates; exactly the
     DataFrames persisted DURING plan construction are unpersisted before
-    returning — a caller-owned session's own caches are never touched
-    (own sessions just stop)."""
+    returning — the session's other caches are never touched."""
     from ts_etl_spark.operators import all_queries
     from ts_etl_spark.plans.audit import plan_str
 
@@ -354,19 +314,14 @@ def run_explain(
             file=sys.stderr,
         )
         return 1
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-explain")
     persisted: list = []
-    try:
-        with _track_persists(persisted):
-            df = registry[name](spark, sf_dir)
-        print(plan_str(df, mode), file=out)
-        return 0
-    finally:
-        if own_session:
-            spark.stop()
-        else:
+    with owned_session(spark, "ts-etl-spark-explain") as spark:
+        try:
+            with _track_persists(persisted):
+                df = registry[name](spark, sf_dir)
+            print(plan_str(df, mode), file=out)
+            return 0
+        finally:
             # plan CONSTRUCTION may persist intermediates (see caveat);
             # release exactly those — never the caller's own caches, and
             # never frames the construction memo retains for the application
@@ -418,7 +373,7 @@ def _track_persists(recorded: list):
         _CDF.persist, _CDF.cache = orig_persist, orig_cache
 
 
-def _explain_main(argv: list[str]) -> int:
+def _explain_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark explain",
         description="Show the optimized physical plan of a registered query.",
@@ -432,12 +387,11 @@ def _explain_main(argv: list[str]) -> int:
         default="formatted",
         choices=["simple", "extended", "formatted", "cost", "codegen"],
     )
-    args = parser.parse_args(argv)
-    try:
-        return run_explain(args.name, args.sf_dir, args.mode)
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during explain: {exc}", file=sys.stderr)
-        return 1
+    return parser
+
+
+def _explain(args: argparse.Namespace) -> int:
+    return run_explain(args.name, args.sf_dir, args.mode)
 
 
 def run_shard(
@@ -455,10 +409,7 @@ def run_shard(
     per-shard row-count manifest (also logged to stderr)."""
     from ts_etl_spark.pipelines.shards import write_training_shards
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-shard")
-    try:
+    with owned_session(spark, "ts-etl-spark-shard") as spark:
         df = spark.read.parquet(in_dir)
         manifest = write_training_shards(
             df, out_dir, n_shards, keys, order_cols=order, seed=seed
@@ -466,12 +417,9 @@ def run_shard(
         for k in sorted(manifest):
             print(f"shard: {k} = {manifest[k]} rows", file=sys.stderr)
         return manifest
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _shard_main(argv: list[str]) -> int:
+def _shard_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark shard",
         description="Write a corpus as deterministic training shards.",
@@ -488,23 +436,21 @@ def _shard_main(argv: list[str]) -> int:
         "(defaults to the keys)",
     )
     parser.add_argument("--seed", default="shard", help="hash seed")
-    args = parser.parse_args(argv)
-    try:
-        run_shard(
-            args.in_dir,
-            args.out_dir,
-            args.n_shards,
-            args.keys.split(","),
-            order=args.order.split(",") if args.order else None,
-            seed=args.seed,
-        )
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during sharding: {exc}", file=sys.stderr)
-        return 1
-    return 0
+    return parser
 
 
-def _pack_main(argv: list[str]) -> int:
+def _shard(args: argparse.Namespace) -> None:
+    run_shard(
+        args.in_dir,
+        args.out_dir,
+        args.n_shards,
+        args.keys.split(","),
+        order=args.order.split(",") if args.order else None,
+        seed=args.seed,
+    )
+
+
+def _pack_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark pack",
         description="Pack a curated corpus into fixed-token training bins.",
@@ -519,13 +465,11 @@ def _pack_main(argv: list[str]) -> int:
         default="n_bpe_tokens",
         help="token-count column (derived from text when absent)",
     )
-    args = parser.parse_args(argv)
-    try:
-        run_pack(args.in_dir, args.out_dir, args.max_tokens, args.tokens_col)
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during pack: {exc}", file=sys.stderr)
-        return 1
-    return 0
+    return parser
+
+
+def _pack(args: argparse.Namespace) -> None:
+    run_pack(args.in_dir, args.out_dir, args.max_tokens, args.tokens_col)
 
 
 def run_chunk(
@@ -540,10 +484,7 @@ def run_chunk(
     chunk count."""
     from ts_etl_spark.operators.chunking import chunk_documents
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-chunk")
-    try:
+    with owned_session(spark, "ts-etl-spark-chunk") as spark:
         df = spark.read.parquet(in_dir).select("doc_id", "text")
         chunk_documents(df, chunk_chars, overlap).write.mode(
             "overwrite"
@@ -551,12 +492,9 @@ def run_chunk(
         n = spark.read.parquet(out_dir).count()
         print(f"chunk: {n} chunks", file=sys.stderr)
         return n
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _chunk_main(argv: list[str]) -> int:
+def _chunk_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark chunk",
         description="Split a corpus into overlapping character chunks.",
@@ -565,13 +503,11 @@ def _chunk_main(argv: list[str]) -> int:
     parser.add_argument("out_dir", help="output parquet of chunks")
     parser.add_argument("--chars", type=int, default=2048, help="chunk size")
     parser.add_argument("--overlap", type=int, default=256, help="chunk overlap")
-    args = parser.parse_args(argv)
-    try:
-        run_chunk(args.in_dir, args.out_dir, args.chars, args.overlap)
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during chunk: {exc}", file=sys.stderr)
-        return 1
-    return 0
+    return parser
+
+
+def _chunk(args: argparse.Namespace) -> None:
+    run_chunk(args.in_dir, args.out_dir, args.chars, args.overlap)
 
 
 def run_split(
@@ -586,10 +522,7 @@ def run_split(
     and write the corpus partitioned by split. Returns per-split counts."""
     from ts_etl_spark.pipelines.sampling import assign_splits
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-split")
-    try:
+    with owned_session(spark, "ts-etl-spark-split") as spark:
         df = spark.read.parquet(in_dir)
         out = assign_splits(df, weights, ["doc_id"], seed=seed)
         out.write.mode("overwrite").partitionBy("split").parquet(out_dir)
@@ -600,9 +533,6 @@ def run_split(
         for name, n in sorted(counts.items()):
             print(f"split: {name} = {n}", file=sys.stderr)
         return counts
-    finally:
-        if own_session:
-            spark.stop()
 
 
 def _parse_weights(spec: str) -> dict[str, float]:
@@ -615,7 +545,7 @@ def _parse_weights(spec: str) -> dict[str, float]:
     return weights
 
 
-def _split_main(argv: list[str]) -> int:
+def _split_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark split",
         description="Assign deterministic train/val/test splits.",
@@ -628,13 +558,11 @@ def _split_main(argv: list[str]) -> int:
         help="comma-separated name=frac weights (normalized)",
     )
     parser.add_argument("--seed", default="split", help="hash seed")
-    args = parser.parse_args(argv)
-    try:
-        run_split(args.in_dir, args.out_dir, _parse_weights(args.weights), args.seed)
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during split: {exc}", file=sys.stderr)
-        return 1
-    return 0
+    return parser
+
+
+def _split(args: argparse.Namespace) -> None:
+    run_split(args.in_dir, args.out_dir, _parse_weights(args.weights), args.seed)
 
 
 def run_optimize(
@@ -656,10 +584,7 @@ def run_optimize(
     )
 
     target = target_file_bytes or DEFAULT_TARGET_FILE_BYTES
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-optimize")
-    try:
+    with owned_session(spark, "ts-etl-spark-optimize") as spark:
         if zorder:
             from ts_etl_spark.pipelines.layout import cluster_parquet
 
@@ -677,12 +602,9 @@ def run_optimize(
             )
             print(f"optimize: compacted into {n} files", file=sys.stderr)
         return n
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _optimize_main(argv: list[str]) -> int:
+def _optimize_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark optimize",
         description="Compact (or Z-order cluster) a parquet directory.",
@@ -703,23 +625,21 @@ def _optimize_main(argv: list[str]) -> int:
         type=int,
         help="target output file size in MiB (default 128)",
     )
-    args = parser.parse_args(argv)
-    try:
-        run_optimize(
-            args.in_dir,
-            args.out_dir,
-            zorder=args.zorder.split(",") if args.zorder else None,
-            target_file_bytes=(
-                args.target_mb * 1024 * 1024 if args.target_mb else None
-            ),
-            equal_frequency=(
-                args.zorder_eqfreq.split(",") if args.zorder_eqfreq else None
-            ),
-        )
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during optimize: {exc}", file=sys.stderr)
-        return 1
-    return 0
+    return parser
+
+
+def _optimize(args: argparse.Namespace) -> None:
+    run_optimize(
+        args.in_dir,
+        args.out_dir,
+        zorder=args.zorder.split(",") if args.zorder else None,
+        target_file_bytes=(
+            args.target_mb * 1024 * 1024 if args.target_mb else None
+        ),
+        equal_frequency=(
+            args.zorder_eqfreq.split(",") if args.zorder_eqfreq else None
+        ),
+    )
 
 
 def run_profile(path: str, out, spark=None) -> int:
@@ -730,34 +650,26 @@ def run_profile(path: str, out, spark=None) -> int:
 
     from ts_etl_spark.pipelines.maintenance import profile_table
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-profile")
-    try:
+    with owned_session(spark, "ts-etl-spark-profile") as spark:
         n = 0
         for row in profile_table(spark.read.parquet(path)).toLocalIterator():
             out.write(_json.dumps(row.asDict()) + "\n")
             n += 1
         print(f"profile: {n} metric rows", file=sys.stderr)
         return n
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _profile_main(argv: list[str]) -> int:
+def _profile_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark profile",
         description="One-pass column profile of a parquet table (JSON lines).",
     )
     parser.add_argument("path", help="parquet file or directory")
-    args = parser.parse_args(argv)
-    try:
-        run_profile(args.path, sys.stdout)
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during profile: {exc}", file=sys.stderr)
-        return 1
-    return 0
+    return parser
+
+
+def _profile(args: argparse.Namespace) -> None:
+    run_profile(args.path, sys.stdout)
 
 
 def run_sql(
@@ -770,10 +682,7 @@ def run_sql(
     row count."""
     from ts_etl_spark.sources.tables import register_views
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-sql")
-    try:
+    with owned_session(spark, "ts-etl-spark-sql") as spark:
         register_views(spark, sf_dir)
         df = spark.sql(query)
         n = 0
@@ -798,12 +707,9 @@ def run_sql(
             raise ValueError(f"Invalid sql output format: {fmt}")
         print(f"sql: {n} rows", file=sys.stderr)
         return n
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _sql_main(argv: list[str]) -> int:
+def _sql_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark sql",
         description="Run Spark SQL over the scale tables (registered as views).",
@@ -817,14 +723,12 @@ def _sql_main(argv: list[str]) -> int:
     parser.add_argument(
         "--format", choices=("jsonl", "csv"), default="jsonl", help="output format"
     )
-    args = parser.parse_args(argv)
+    return parser
+
+
+def _sql(args: argparse.Namespace) -> None:
     query = sys.stdin.read() if args.query == "-" else args.query
-    try:
-        run_sql(query, args.sf_dir, sys.stdout, fmt=args.format)
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during sql: {exc}", file=sys.stderr)
-        return 1
-    return 0
+    run_sql(query, args.sf_dir, sys.stdout, fmt=args.format)
 
 
 def run_sem_train(
@@ -849,10 +753,7 @@ def run_sem_train(
     )
     from pyspark.sql import functions as F
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-sem-train")
-    try:
+    with owned_session(spark, "ts-etl-spark-sem-train") as spark:
         docs = spark.read.parquet(docs_path).select("doc_id", "text")
         v = as_double(F.col("embedding"))
         vecs = (
@@ -869,12 +770,9 @@ def run_sem_train(
         n = spark.read.parquet(out_cents).count()
         print(f"sem-train: wrote {n} centroids to {out_cents}", file=sys.stderr)
         return n
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _sem_train_main(argv: list[str]) -> int:
+def _sem_train_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark sem-train",
         description="Train the semantic-gate quantizer from a document corpus.",
@@ -884,15 +782,13 @@ def _sem_train_main(argv: list[str]) -> int:
     parser.add_argument("--k", type=int, default=16, help="number of centroids")
     parser.add_argument("--seed", type=int, default=7)
     parser.add_argument("--max-iter", type=int, default=5)
-    args = parser.parse_args(argv)
-    try:
-        run_sem_train(
-            args.docs_path, args.out_cents, args.k, args.seed, args.max_iter
-        )
-        return 0
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during sem-train: {exc}", file=sys.stderr)
-        return 1
+    return parser
+
+
+def _sem_train(args: argparse.Namespace) -> None:
+    run_sem_train(
+        args.docs_path, args.out_cents, args.k, args.seed, args.max_iter
+    )
 
 
 def run_ingest(
@@ -934,10 +830,7 @@ def run_ingest(
     from ts_etl_spark.operators.dedup import JACCARD_THRESHOLD
     from ts_etl_spark.streaming.ingest import IngestConfig, run_streaming_ingest
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-ingest")
-    try:
+    with owned_session(spark, "ts-etl-spark-ingest") as spark:
         run_streaming_ingest(
             spark,
             landing_dir,
@@ -993,12 +886,9 @@ def run_ingest(
         n = spark.read.parquet(corpus_path).count()
         print(f"ingest: corpus now holds {n} documents", file=sys.stderr)
         return {"corpus_docs": n}
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _ingest_main(argv: list[str]) -> int:
+def _ingest_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark ingest",
         description="Stream a landing directory into a deduped corpus.",
@@ -1059,31 +949,29 @@ def _ingest_main(argv: list[str]) -> int:
         help="single-writer lease file: refuse to run while another "
         "ingest/maintenance pass holds a fresh lease on this state",
     )
-    args = parser.parse_args(argv)
-    try:
-        run_ingest(
-            args.landing_dir,
-            args.corpus_path,
-            args.checkpoint,
-            threshold=args.threshold,
-            max_files=args.max_files if args.max_files != 0 else None,
-            stats_path=args.stats,
-            len_hdr_path=args.len_hdr,
-            bm25_lexicon_path=args.bm25_lexicon,
-            drift_path=args.drift,
-            hh_path=args.hh,
-            sem_index_path=args.sem_index,
-            sem_cents_path=args.sem_cents,
-            sem_threshold=args.sem_threshold,
-            win_index_path=args.win_index,
-            dedup_index_path=args.dedup_index,
-            compact_after=args.compact_after,
-            lease_path=args.lease,
-        )
-        return 0
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during ingest: {exc}", file=sys.stderr)
-        return 1
+    return parser
+
+
+def _ingest(args: argparse.Namespace) -> None:
+    run_ingest(
+        args.landing_dir,
+        args.corpus_path,
+        args.checkpoint,
+        threshold=args.threshold,
+        max_files=args.max_files if args.max_files != 0 else None,
+        stats_path=args.stats,
+        len_hdr_path=args.len_hdr,
+        bm25_lexicon_path=args.bm25_lexicon,
+        drift_path=args.drift,
+        hh_path=args.hh,
+        sem_index_path=args.sem_index,
+        sem_cents_path=args.sem_cents,
+        sem_threshold=args.sem_threshold,
+        win_index_path=args.win_index,
+        dedup_index_path=args.dedup_index,
+        compact_after=args.compact_after,
+        lease_path=args.lease,
+    )
 
 
 def run_seen_admit(
@@ -1096,10 +984,7 @@ def run_seen_admit(
     (also logged to stderr)."""
     from ts_etl_spark.streaming.ingest import admit_seen_ids
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-seen-admit")
-    try:
+    with owned_session(spark, "ts-etl-spark-seen-admit") as spark:
         n = admit_seen_ids(spark, dedup_index_path, ids)
         print(
             f"seen-admit: appended {n} of {len(ids)} ids to "
@@ -1107,12 +992,9 @@ def run_seen_admit(
             file=sys.stderr,
         )
         return n
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _seen_admit_main(argv: list[str]) -> int:
+def _seen_admit_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark seen-admit",
         description=(
@@ -1125,13 +1007,11 @@ def _seen_admit_main(argv: list[str]) -> int:
         "ids", nargs="+", type=int,
         help="doc_ids known to have been attempted before the index existed",
     )
-    args = parser.parse_args(argv)
-    try:
-        run_seen_admit(args.dedup_index_path, args.ids)
-        return 0
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during seen-admit: {exc}", file=sys.stderr)
-        return 1
+    return parser
+
+
+def _seen_admit(args: argparse.Namespace) -> None:
+    run_seen_admit(args.dedup_index_path, args.ids)
 
 
 def run_compact_state(
@@ -1172,10 +1052,7 @@ def run_compact_state(
         prune_ingest_telemetry,
     )
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-compact-state")
-    try:
+    with owned_session(spark, "ts-etl-spark-compact-state") as spark:
         out = compact_ingest_state(
             spark,
             corpus_path=corpus_path,
@@ -1218,12 +1095,9 @@ def run_compact_state(
         if not out:
             print("compact-state: no state tables found", file=sys.stderr)
         return out
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _compact_state_main(argv: list[str]) -> int:
+def _compact_state_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark compact-state",
         description=(
@@ -1276,7 +1150,10 @@ def _compact_state_main(argv: list[str]) -> int:
         "--corpus, --ann-index AND --lease), re-derive the serving "
         "index from the corpus instead of failing",
     )
-    args = parser.parse_args(argv)
+    return parser
+
+
+def _compact_state(args: argparse.Namespace) -> int | None:
     if not (
         args.corpus or args.dedup_index or args.win_index or args.sem_index
         or args.bm25_lexicon or args.ann_index
@@ -1302,26 +1179,21 @@ def _compact_state_main(argv: list[str]) -> int:
             file=sys.stderr,
         )
         return 1
-    try:
-        run_compact_state(
-            corpus_path=args.corpus,
-            dedup_index_path=args.dedup_index,
-            win_index_path=args.win_index,
-            sem_index_path=args.sem_index,
-            bm25_lexicon_path=args.bm25_lexicon,
-            target_mb=args.target_mb,
-            drift_path=args.drift_path,
-            hh_path=args.hh_path,
-            telemetry_horizon=args.telemetry_horizon,
-            lease_path=args.lease,
-            auto_rebuild_bm25=args.auto_rebuild_bm25,
-            ann_index_path=args.ann_index,
-            auto_rebuild_ann=args.auto_rebuild_ann,
-        )
-        return 0
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during compact-state: {exc}", file=sys.stderr)
-        return 1
+    run_compact_state(
+        corpus_path=args.corpus,
+        dedup_index_path=args.dedup_index,
+        win_index_path=args.win_index,
+        sem_index_path=args.sem_index,
+        bm25_lexicon_path=args.bm25_lexicon,
+        target_mb=args.target_mb,
+        drift_path=args.drift_path,
+        hh_path=args.hh_path,
+        telemetry_horizon=args.telemetry_horizon,
+        lease_path=args.lease,
+        auto_rebuild_bm25=args.auto_rebuild_bm25,
+        ann_index_path=args.ann_index,
+        auto_rebuild_ann=args.auto_rebuild_ann,
+    )
 
 
 def _with_ingest_lease(spark, lease_path: str | None, fn):
@@ -1395,10 +1267,7 @@ def run_bm25_rebuild(
     the ingests use; acquired for the rebuild, released after."""
     from ts_etl_spark.streaming.ingest import rebuild_bm25_lexicon
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-bm25-rebuild")
-    try:
+    with owned_session(spark, "ts-etl-spark-bm25-rebuild") as spark:
         _with_ingest_lease(
             spark,
             lease_path,
@@ -1409,12 +1278,9 @@ def run_bm25_rebuild(
             f"{corpus_path}",
             file=sys.stderr,
         )
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _bm25_rebuild_main(argv: list[str]) -> int:
+def _bm25_rebuild_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark bm25-rebuild",
         description=(
@@ -1431,13 +1297,11 @@ def _bm25_rebuild_main(argv: list[str]) -> int:
         "ingest runs (a rebuild racing a live drain can lose or "
         "double-fold a batch)",
     )
-    args = parser.parse_args(argv)
-    try:
-        run_bm25_rebuild(args.corpus_path, args.lexicon_path, args.lease)
-        return 0
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during bm25-rebuild: {exc}", file=sys.stderr)
-        return 1
+    return parser
+
+
+def _bm25_rebuild(args: argparse.Namespace) -> None:
+    run_bm25_rebuild(args.corpus_path, args.lexicon_path, args.lease)
 
 
 def run_ann_rebuild(
@@ -1455,10 +1319,7 @@ def run_ann_rebuild(
     lease contract as ``run_bm25_rebuild``."""
     from ts_etl_spark.streaming.ann_index import rebuild_ann_index
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-ann-rebuild")
-    try:
+    with owned_session(spark, "ts-etl-spark-ann-rebuild") as spark:
         _with_ingest_lease(
             spark,
             lease_path,
@@ -1469,12 +1330,9 @@ def run_ann_rebuild(
             f"from {corpus_path}",
             file=sys.stderr,
         )
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _ann_rebuild_main(argv: list[str]) -> int:
+def _ann_rebuild_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark ann-rebuild",
         description=(
@@ -1491,13 +1349,11 @@ def _ann_rebuild_main(argv: list[str]) -> int:
         "ingest runs (a rebuild racing a live drain can lose or "
         "double-fold a batch)",
     )
-    args = parser.parse_args(argv)
-    try:
-        run_ann_rebuild(args.corpus_path, args.index_path, args.lease)
-        return 0
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during ann-rebuild: {exc}", file=sys.stderr)
-        return 1
+    return parser
+
+
+def _ann_rebuild(args: argparse.Namespace) -> None:
+    run_ann_rebuild(args.corpus_path, args.index_path, args.lease)
 
 
 def run_len_hdr_rebuild(
@@ -1513,10 +1369,7 @@ def run_len_hdr_rebuild(
     contract as ``run_bm25_rebuild``."""
     from ts_etl_spark.streaming.ingest import rebuild_length_histogram
 
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-len-hdr-rebuild")
-    try:
+    with owned_session(spark, "ts-etl-spark-len-hdr-rebuild") as spark:
         _with_ingest_lease(
             spark,
             lease_path,
@@ -1527,12 +1380,9 @@ def run_len_hdr_rebuild(
             f"{corpus_path}",
             file=sys.stderr,
         )
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _len_hdr_rebuild_main(argv: list[str]) -> int:
+def _len_hdr_rebuild_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark len-hdr-rebuild",
         description=(
@@ -1548,13 +1398,11 @@ def _len_hdr_rebuild_main(argv: list[str]) -> int:
         help="single-writer lease file shared with the deployment's "
         "ingest runs",
     )
-    args = parser.parse_args(argv)
-    try:
-        run_len_hdr_rebuild(args.corpus_path, args.hdr_path, args.lease)
-        return 0
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during len-hdr-rebuild: {exc}", file=sys.stderr)
-        return 1
+    return parser
+
+
+def _len_hdr_rebuild(args: argparse.Namespace) -> None:
+    run_len_hdr_rebuild(args.corpus_path, args.hdr_path, args.lease)
 
 
 #: PSI acceptance band for the drift report — the standard population-
@@ -1613,9 +1461,6 @@ def run_drift_report(
         # oldest instead of bounding to the newest — refuse both
         raise ValueError(f"drift-report: --last must be >= 1 (got {last})")
     out = sys.stdout if out is None else out
-    own_session = spark is None
-    if own_session:
-        spark = get_spark(app_name="ts-etl-spark-drift-report")
     report: dict = {"psi": {}, "lenq": {}, "hh": {}, "ann": {}, "flagged": []}
 
     def _bid(tag: str) -> int | str:
@@ -1657,7 +1502,7 @@ def run_drift_report(
             .parquet(*[p for _, p in found])
         )
 
-    try:
+    with owned_session(spark, "ts-etl-spark-drift-report") as spark:
         if drift_path is not None:
             df = _read_batches(
                 drift_path,
@@ -1761,12 +1606,9 @@ def run_drift_report(
             file=out,
         )
         return report
-    finally:
-        if own_session:
-            spark.stop()
 
 
-def _drift_report_main(argv: list[str]) -> int:
+def _drift_report_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark drift-report",
         description=(
@@ -1798,66 +1640,28 @@ def _drift_report_main(argv: list[str]) -> int:
         action="store_true",
         help="exit 1 when any batch is flagged (for cron/CI wiring)",
     )
-    args = parser.parse_args(argv)
+    return parser
+
+
+def _drift_report(args: argparse.Namespace) -> int | None:
     if not (args.drift or args.hh or args.ann):
         print(
             "drift-report: give --drift, --hh and/or --ann",
             file=sys.stderr,
         )
         return 1
-    try:
-        report = run_drift_report(
-            drift_path=args.drift,
-            hh_path=args.hh,
-            last=args.last,
-            psi_threshold=args.psi_threshold,
-            ann_index_path=args.ann,
-        )
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during drift-report: {exc}", file=sys.stderr)
-        return 1
+    report = run_drift_report(
+        drift_path=args.drift,
+        hh_path=args.hh,
+        last=args.last,
+        psi_threshold=args.psi_threshold,
+        ann_index_path=args.ann,
+    )
     if args.fail_on_flagged and report["flagged"]:
         return 1
-    return 0
 
 
-def main(argv: list[str] | None = None) -> int:
-    if argv is None:
-        argv = sys.argv[1:]
-    if argv and argv[0] == "ingest":
-        return _ingest_main(argv[1:])
-    if argv and argv[0] == "seen-admit":
-        return _seen_admit_main(argv[1:])
-    if argv and argv[0] == "bm25-rebuild":
-        return _bm25_rebuild_main(argv[1:])
-    if argv and argv[0] == "ann-rebuild":
-        return _ann_rebuild_main(argv[1:])
-    if argv and argv[0] == "len-hdr-rebuild":
-        return _len_hdr_rebuild_main(argv[1:])
-    if argv and argv[0] == "compact-state":
-        return _compact_state_main(argv[1:])
-    if argv and argv[0] == "drift-report":
-        return _drift_report_main(argv[1:])
-    if argv and argv[0] == "sem-train":
-        return _sem_train_main(argv[1:])
-    if argv and argv[0] == "curate":
-        return _curate_main(argv[1:])
-    if argv and argv[0] == "sql":
-        return _sql_main(argv[1:])
-    if argv and argv[0] == "optimize":
-        return _optimize_main(argv[1:])
-    if argv and argv[0] == "profile":
-        return _profile_main(argv[1:])
-    if argv and argv[0] == "pack":
-        return _pack_main(argv[1:])
-    if argv and argv[0] == "chunk":
-        return _chunk_main(argv[1:])
-    if argv and argv[0] == "split":
-        return _split_main(argv[1:])
-    if argv and argv[0] == "shard":
-        return _shard_main(argv[1:])
-    if argv and argv[0] == "explain":
-        return _explain_main(argv[1:])
+def _conversion_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(
         prog="ts-etl-spark",
         description="Convert CSV/PRN on stdin to JSON/HTML on stdout.",
@@ -1871,32 +1675,68 @@ def main(argv: list[str] | None = None) -> int:
         "from stdin (the reference's pipe contract)",
     )
     parser.add_argument("-d", "--delimiter", default=",", help="CSV delimiter")
-    args = parser.parse_args(argv)
+    return parser
 
+
+def _conversion(args: argparse.Namespace) -> int | None:
     if args.input_type.lower() not in sources.SOURCES:
         print(f"Invalid input type: {args.input_type}", file=sys.stderr)
         return 1
     if args.output_type.lower() not in sinks.SINKS:
         print(f"Invalid output type: {args.output_type}", file=sys.stderr)
         return 1
+    if args.input_path is not None:
+        run_conversion_path(
+            args.input_type,
+            args.output_type,
+            args.input_path,
+            sys.stdout,
+            csv_delimiter=args.delimiter,
+        )
+    else:
+        run_conversion(
+            args.input_type,
+            args.output_type,
+            sys.stdin.buffer.read(),
+            sys.stdout,
+            csv_delimiter=args.delimiter,
+        )
+
+
+#: subcommand -> (parser builder, handler). ``main`` dispatches on
+#: ``argv[0]``; anything else is the reference's conversion command.
+COMMANDS = {
+    "ingest": (_ingest_parser, _ingest),
+    "seen-admit": (_seen_admit_parser, _seen_admit),
+    "bm25-rebuild": (_bm25_rebuild_parser, _bm25_rebuild),
+    "ann-rebuild": (_ann_rebuild_parser, _ann_rebuild),
+    "len-hdr-rebuild": (_len_hdr_rebuild_parser, _len_hdr_rebuild),
+    "compact-state": (_compact_state_parser, _compact_state),
+    "drift-report": (_drift_report_parser, _drift_report),
+    "sem-train": (_sem_train_parser, _sem_train),
+    "curate": (_curate_parser, _curate),
+    "sql": (_sql_parser, _sql),
+    "optimize": (_optimize_parser, _optimize),
+    "profile": (_profile_parser, _profile),
+    "pack": (_pack_parser, _pack),
+    "chunk": (_chunk_parser, _chunk),
+    "split": (_split_parser, _split),
+    "shard": (_shard_parser, _shard),
+    "explain": (_explain_parser, _explain),
+}
+
+
+def main(argv: list[str] | None = None) -> int:
+    if argv is None:
+        argv = sys.argv[1:]
+    if argv and argv[0] in COMMANDS:
+        name, argv = argv[0], argv[1:]
+        build, handle = COMMANDS[name]
+    else:
+        name, build, handle = "conversion", _conversion_parser, _conversion
+    args = build().parse_args(argv)
     try:
-        if args.input_path is not None:
-            run_conversion_path(
-                args.input_type,
-                args.output_type,
-                args.input_path,
-                sys.stdout,
-                csv_delimiter=args.delimiter,
-            )
-        else:
-            run_conversion(
-                args.input_type,
-                args.output_type,
-                sys.stdin.buffer.read(),
-                sys.stdout,
-                csv_delimiter=args.delimiter,
-            )
-    except Exception as exc:  # noqa: BLE001 — CLI boundary
-        print(f"Error during conversion: {exc}", file=sys.stderr)
+        return handle(args) or 0
+    except Exception as exc:  # noqa: BLE001 — the one CLI boundary
+        print(f"Error during {name}: {exc}", file=sys.stderr)
         return 1
-    return 0

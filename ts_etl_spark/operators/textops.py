@@ -190,20 +190,6 @@ def _signature_cols() -> list:
     return sel
 
 
-def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document corpus metrics (building block; registered via the
-    merged ``text_analysis``)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", *_metric_cols())
-
-
-def q_text_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document identity signals (building block; registered via the
-    merged ``text_analysis``)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", *_signature_cols())
-
-
 # --------------------------------------------------------------------------
 # PII detection / redaction
 # --------------------------------------------------------------------------

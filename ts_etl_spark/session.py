@@ -17,7 +17,10 @@ Tuned for correctness on local[N] test runs AND for the 1000-executor /
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -83,3 +86,21 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def owned_session(spark: SparkSession | None, app_name: str) -> Iterator[SparkSession]:
+    """Yield the caller's session when one is given; otherwise yield
+    ``get_spark(app_name=...)`` and stop it on exit. A session is stopped
+    only when no SparkContext was running on entry: ``getOrCreate`` hands
+    back a live one, and stopping it would kill its owner's session."""
+    if spark is not None:
+        yield spark
+        return
+    started = SparkContext._active_spark_context is None
+    spark = get_spark(app_name=app_name)
+    try:
+        yield spark
+    finally:
+        if started:
+            spark.stop()

@@ -48,12 +48,6 @@ def write_orc(
     w.orc(path)
 
 
-def write_json_lines(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Distributed JSON-lines write (framing is NOT the reference's array
-    contract — that lives in json_sink; this is the scale path)."""
-    df.write.mode(mode).json(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,
