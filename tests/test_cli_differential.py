@@ -63,28 +63,40 @@ def test_malformed_csv_errors(spark):  # E7 end-to-end
         run_conversion("csv", "json", b'Name,Address\n"Unclosed,B\n', buf, spark=spark)
 
 
-def test_json_order_preserved_across_partitions(spark, tmp_path):
+@pytest.mark.parametrize("in_type", ["csv", "prn"])
+def test_json_order_preserved_across_partitions(spark, tmp_path, in_type):
     """The rendered sinks must emit rows in input order even when the file
     splits into multiple scan partitions (__row_id ordering)."""
     import io
 
+    from tests.test_differential_generated import _prn_bytes
     from ts_etl_spark.sinks.json_sink import write_json
-    from ts_etl_spark.sources.csv_source import read_csv
+    from ts_etl_spark.sources import SOURCES
 
-    text = "Name,Credit Limit\n" + "".join(f"P{i:04d},{i}\n" for i in range(300))
-    path = tmp_path / "big.csv"
-    path.write_text(text)
+    if in_type == "csv":
+        text = "Name,Credit Limit\n" + "".join(f"P{i:04d},{i}\n" for i in range(300))
+        data = text.encode()
+    else:
+        data = _prn_bytes(
+            [
+                (f"P{i:04d}", f"Straße {i}", "1234 AB", "020 1234567", i, (1990, 1, 1 + i % 28))
+                for i in range(300)
+            ]
+        )
+    path = tmp_path / f"big.{in_type}"
+    path.write_bytes(data)
+    read = SOURCES[in_type]
 
     def render(df):
         buf = io.StringIO()
         write_json(df, buf)
         return buf.getvalue()
 
-    single = render(read_csv(spark, str(path)))
+    single = render(read(spark, str(path)))
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "512")
-        multi_df = read_csv(spark, str(path))
+        multi_df = read(spark, str(path))
         assert multi_df.rdd.getNumPartitions() > 1
         multi = render(multi_df)
     finally:

@@ -1561,9 +1561,7 @@ def test_lease_steal_aborts_compaction_pass_loudly(
 
 
 @pytest.mark.slow
-def test_drift_report_cli_surfaces_flagged_batches(
-    spark, tmp_path, capsys, monkeypatch
-):
+def test_drift_report_cli_surfaces_flagged_batches(spark, tmp_path, capsys):
     """Round 14 (r13 verdict #5): the telemetry finally has an
     operational consumer — ``drift-report`` reads the PSI drift log,
     the ``_lenq`` length-quantile log and the attempt heavy-hitter
@@ -1613,15 +1611,7 @@ def test_drift_report_cli_surfaces_flagged_batches(
     assert "lenq batch=1" in out and "FLAGGED" in out
     assert "hh batch=1 attempts=4" in out
 
-    # CLI wiring: exit 0 without the flag gate, 1 with it (the shared
-    # test session is injected — main() would otherwise getOrCreate the
-    # same session and stop it on exit)
-    real_rdr = cli.run_drift_report
-    monkeypatch.setattr(
-        cli,
-        "run_drift_report",
-        lambda **kw: real_rdr(**{**kw, "spark": spark}),
-    )
+    # CLI wiring: exit 0 without the flag gate, 1 with it
     assert cli.main(["drift-report", "--drift", drift, "--hh", hh]) == 0
     assert (
         cli.main(

@@ -64,17 +64,17 @@ def test_cli_profile_streams_jsonl(spark, tmp_path, capsys):
     assert rows_metric and int(rows_metric[0]["value"]) == 5
 
 
-def test_cli_leaves_a_running_session_live(spark, sf_smoke):
+def test_cli_leaves_a_running_session_live(spark, sf_smoke, monkeypatch):
     """A CLI call without ``spark`` in a process that already runs a
-    session reuses that session and must not stop it."""
+    session reuses that session as it is: it must neither stop it nor
+    re-tune it."""
     from ts_etl_spark import cli
 
     partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        assert cli.main(["profile", f"{sf_smoke}/region.parquet"]) == 0
-    finally:
-        # get_spark re-applies its runtime conf to a reused session
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    # a core count that get_spark would turn into a different setting
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", str(int(partitions) + 3))
+    assert cli.main(["profile", f"{sf_smoke}/region.parquet"]) == 0
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
     assert spark.range(3).count() == 3
 
 

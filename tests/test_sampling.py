@@ -1,5 +1,5 @@
 """Corpus-composition utilities: determinism, engine portability,
-mixture math, and the distributed-shuffle plan shape."""
+mixture math, and the shuffle-free plan shape."""
 
 import duckdb
 import pytest
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from ts_etl_spark.pipelines.sampling import (
     assign_splits,
-    deterministic_shuffle,
     mix_to_target,
     stratified_sample,
     target_mixture_fractions,
@@ -135,25 +134,6 @@ def test_assign_splits_no_shuffle_and_validation(spark, docs):
         assign_splits(docs, {"a": -1.0, "b": 2.0}, ["doc_id"])
 
 
-def test_deterministic_shuffle_reproducible_and_seed_sensitive(spark, docs):
-    a = [r.doc_id for r in deterministic_shuffle(docs, ["doc_id"], seed="s1").select("doc_id").toLocalIterator()]
-    b = [r.doc_id for r in deterministic_shuffle(docs, ["doc_id"], seed="s1").select("doc_id").toLocalIterator()]
-    c = [r.doc_id for r in deterministic_shuffle(docs, ["doc_id"], seed="s2").select("doc_id").toLocalIterator()]
-    assert a == b
-    assert a != c  # a different seed is a different permutation
-    assert sorted(a) == sorted(c)  # ... of the same rows
-    assert a != sorted(a)  # and it actually shuffled
-
-
-def test_deterministic_shuffle_plan_is_range_partitioned(spark, docs):
-    """The shuffle must be a RANGE exchange + per-partition sorts — never a
-    single-partition global sort."""
-    df = deterministic_shuffle(docs, ["doc_id"], partitions=8)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower(), plan
-    assert df.rdd.getNumPartitions() == 8
-
-
 def test_temperature_shares_math():
     import pytest as _pytest
 
@@ -172,31 +152,3 @@ def test_temperature_shares_math():
     assert temperature_shares({"x": 0}, 0.5) == {}
     with _pytest.raises(ValueError, match="tau"):
         temperature_shares(counts, 1.5)
-
-
-def test_mix_to_temperature_flattens_composition(spark):
-    """tau=0.5 on a skewed corpus yields a measurably flatter mixture
-    whose realized shares track the temperature targets, with the
-    smallest stratum retained in full (the binding stratum keeps
-    fraction 1.0 — maximum data subject to the mixture)."""
-    import pytest as _pytest
-
-    from ts_etl_spark.pipelines.sampling import (
-        mix_to_temperature,
-        temperature_shares,
-    )
-
-    rows = [(i, "en" if i < 900 else ("de" if i < 980 else "mi"))
-            for i in range(1000)]
-    df = spark.createDataFrame(rows, "doc_id LONG, lang STRING")
-    out = mix_to_temperature(df, "lang", 0.5, ["doc_id"])
-    got = {r.lang: r.n for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    # smallest stratum fully retained
-    assert got["mi"] == 20
-    want = temperature_shares({"en": 900, "de": 80, "mi": 20}, 0.5)
-    total = sum(got.values())
-    for lang, n in got.items():
-        # deterministic hash sampling: realized share within a few points
-        assert n / total == _pytest.approx(want[lang], abs=0.05), lang
-    # tau=1 keeps everything (natural shares are already the composition)
-    assert mix_to_temperature(df, "lang", 1.0, ["doc_id"]).count() == 1000

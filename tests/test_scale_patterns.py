@@ -1,12 +1,12 @@
-"""Scale-technique tests: partition pruning, bucketed co-located joins,
-skew salting — correctness AND plan shape."""
+"""Scale-technique tests: partition pruning, skew salting, ANN and PCA —
+correctness AND plan shape."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ts_etl_spark.operators.skew import salted_aggregate, salted_join
-from ts_etl_spark.plans.audit import num_exchanges, plan_str
-from ts_etl_spark.sinks.table_sink import write_bucketed, write_parquet
+from ts_etl_spark.plans.audit import plan_str
+from ts_etl_spark.sinks.table_sink import write_parquet
 from ts_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -21,33 +21,6 @@ def test_partitioned_write_enables_pruning(spark, tmp_path):
     assert "PartitionFilters" in plan and "o_orderstatus" in plan.split("PartitionFilters")[1].split("]")[0]
     want = orders.filter(F.col("o_orderstatus") == "F").count()
     assert back.count() == want
-
-
-def test_bucketed_join_no_shuffle(spark):
-    import shutil
-
-    # the in-memory catalog forgets tables across sessions but the warehouse
-    # directory persists — clear both
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    for t in ("b_orders", "b_customer"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-
-    orders = load_table(spark, SF, "orders")
-    cust = load_table(spark, SF, "customer")
-    write_bucketed(orders, "b_orders", ["o_custkey"], 8, sort_cols=["o_custkey"])
-    write_bucketed(cust, "b_customer", ["c_custkey"], 8, sort_cols=["c_custkey"])
-    left = spark.table("b_orders")
-    right = spark.table("b_customer").withColumnRenamed("c_custkey", "o_custkey")
-    # disable broadcast so the join would normally shuffle both sides
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = left.join(right, "o_custkey")
-        assert num_exchanges(joined) == 0, plan_str(joined)
-        assert joined.count() == 15000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_salted_aggregate_matches_plain(spark):
@@ -232,43 +205,6 @@ def test_bucketed_running_sum_matches_plain_window(spark):
     assert got == want and len(want) > 0
 
 
-def test_windowed_skew_guard_routes_and_matches(spark):
-    """windowed_with_skew_guard: both routes (forced hot → bucketed path,
-    forced cold → plain window) return identical results, and the probe
-    actually picks the bucketed plan when the threshold trips."""
-    from pyspark.sql import functions as F
-
-    from ts_etl_spark.operators.relational import dec
-    from ts_etl_spark.operators.skew import windowed_with_skew_guard
-    from ts_etl_spark.plans.audit import count_nodes
-    from ts_etl_spark.sources.tables import load_table
-
-    SF = "/root/testdata/sf0.01"
-    orders = load_table(spark, SF, "orders").select(
-        "o_custkey",
-        (F.unix_timestamp("o_orderdate") * 10_000_000 + F.col("o_orderkey")).alias("ord"),
-        dec("o_totalprice").alias("v"),
-    )
-    hot = windowed_with_skew_guard(
-        orders, "o_custkey", "ord", "v",
-        hot_threshold=1, sample_fraction=1.0, n_buckets=8,
-    )
-    cold = windowed_with_skew_guard(
-        orders, "o_custkey", "ord", "v",
-        hot_threshold=10**12, sample_fraction=1.0,
-    )
-    # the guard changed the physical strategy: hot route has no
-    # single per-key Window over the full frame (two bucket-level windows
-    # + joins instead), cold route is exactly one Window
-    assert count_nodes(cold, "Window") == 1
-    assert count_nodes(hot, "Window") == 2  # local slice + bucket offsets
-    to_set = lambda df: {  # noqa: E731
-        (r.o_custkey, r.ord, float(r.running_total)) for r in df.collect()
-    }
-    hs, cs = to_set(hot), to_set(cold)
-    assert hs == cs and len(hs) > 0
-
-
 def test_kmeans_trained_ivf_matches_seed_recall(spark):
     """The k-means-trained centroid path (train_ivf_centroids + ivf_topk)
     must work end-to-end and, even on this uniform corpus where learned
@@ -405,24 +341,6 @@ def test_quantized_topk_excludes_zero_vectors_explicitly(spark):
     assert 3 not in set(by_q.get(1, []))  # zero corpus vector never ranked
     assert 3 not in by_q  # zero-vector query produces no rows
     assert by_q[1][0] == 2  # sane ranking survives the guard
-
-
-def test_orc_roundtrip_with_pruning(spark, tmp_path):
-    """ORC sink: values survive the round-trip exactly and the partition
-    layout prunes like the parquet one."""
-    from ts_etl_spark.sinks.table_sink import write_orc
-    from ts_etl_spark.sources.tables import load_table
-
-    orders = load_table(spark, SF, "orders")
-    path = str(tmp_path / "orders_orc")
-    write_orc(orders, path, partition_by=["o_orderstatus"])
-    back = spark.read.orc(path)
-    a = sorted((r.o_orderkey, float(r.o_totalprice)) for r in orders.collect())
-    b = sorted((r.o_orderkey, float(r.o_totalprice)) for r in back.collect())
-    assert a == b
-    pruned = back.filter(F.col("o_orderstatus") == "F")
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "o_orderstatus" in plan
 
 
 def test_queries_self_heal_non_utc_session(spark):

@@ -221,61 +221,6 @@ def test_cm_register_plan_is_partial_aggregated(spark):
 # --------------------------------------------------------------------------
 
 
-def test_grouped_registers_match_per_group_recompute(spark):
-    """hll_registers_by in one pass == hll_registers run separately on
-    each group's slice (and therefore inherits the same merge law)."""
-    from ts_etl_spark.operators.sketches import hll_registers, hll_registers_by
-
-    li = _lineitem(spark)
-    grouped = {
-        (r.l_returnflag, r.bucket): r.rho
-        for r in hll_registers_by(li, ["l_returnflag"], "l_partkey").collect()
-    }
-    flags = [r.l_returnflag for r in li.select("l_returnflag").distinct().collect()]
-    for flag in flags:
-        per = {
-            (flag, r.bucket): r.rho
-            for r in hll_registers(
-                li.filter(F.col("l_returnflag") == flag), "l_partkey"
-            ).collect()
-        }
-        assert per == {k: v for k, v in grouped.items() if k[0] == flag}, flag
-
-
-def test_grouped_estimate_matches_global_estimator_math(spark):
-    """hll_estimate_by's occupied-only algebra must equal the global
-    estimator run on each group's registers (identical switch and
-    arithmetic), and land within the documented error of exact."""
-    from ts_etl_spark.operators.sketches import (
-        hll_estimate,
-        hll_registers,
-        hll_registers_by,
-        hll_estimate_by,
-    )
-
-    li = _lineitem(spark)
-    got = {
-        r.l_returnflag: r.estimate
-        for r in hll_estimate_by(
-            hll_registers_by(li, ["l_returnflag"], "l_partkey"),
-            ["l_returnflag"],
-        ).collect()
-    }
-    exact = {
-        r.l_returnflag: r.n
-        for r in li.groupBy("l_returnflag")
-        .agg(F.countDistinct("l_partkey").alias("n"))
-        .collect()
-    }
-    for flag, est in got.items():
-        ref = hll_estimate(
-            spark,
-            hll_registers(li.filter(F.col("l_returnflag") == flag), "l_partkey"),
-        ).first().estimate
-        assert est == pytest.approx(ref, rel=1e-12), flag
-        assert abs(est - exact[flag]) <= exact[flag] * 0.15, (flag, est, exact[flag])
-
-
 # --------------------------------------------------------------------------
 # HDR histogram (round 12): the mergeable quantile sketch
 # --------------------------------------------------------------------------

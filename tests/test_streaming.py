@@ -1,384 +1,10 @@
-"""Structured Streaming tests: batch/stream equivalence, watermark
-late-data drop, custom stateful operator."""
+"""Structured Streaming ingest: the kill-and-restart soak of
+``run_streaming_ingest`` through a real file-source stream."""
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
-
-from ts_etl_spark.streaming.events import (
-    run_available_now,
-    session_counts,
-    stateful_user_totals,
-    stream_events,
-    tumbling_counts,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def events_dir(tmp_path):
-    """File-source streaming requires a directory; stage the events table
-    into one via symlink."""
-    import os
-
-    d = tmp_path / "events_src"
-    d.mkdir()
-    os.symlink(f"{SF}/events.parquet", d / "events.parquet")
-    return str(d)
-
-
-def _write_events(path, rows):
-    """rows: (event_id, ts_iso, user_id, event_type, value)"""
-    tbl = pa.table(
-        {
-            "event_id": pa.array([r[0] for r in rows], pa.int64()),
-            "ts": pa.array(
-                [pd.Timestamp(r[1]) for r in rows], pa.timestamp("ns")
-            ),
-            "user_id": pa.array([r[2] for r in rows], pa.int64()),
-            "event_type": pa.array([r[3] for r in rows], pa.string()),
-            "value": pa.array([r[4] for r in rows], pa.float64()),
-            "props": pa.array(["{}"] * len(rows), pa.string()),
-        }
-    )
-    pq.write_table(tbl, path)
-
-
-def test_stream_starts_on_empty_landing_dir(spark, tmp_path):
-    """The schema probe falls back to EVENTS_FILE_SCHEMA when the landing
-    directory is empty, so a stream can start before the first file lands
-    (regression: the batch probe used to throw on an empty directory)."""
-    d = tmp_path / "empty_landing"
-    d.mkdir()
-    stream = stream_events(spark, str(d))
-    agg = tumbling_counts(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("empty_landing_counts")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    assert spark.sql("SELECT * FROM empty_landing_counts").count() == 0
-
-
-def test_stream_started_empty_survives_first_nanos_file(spark, tmp_path):
-    """The fallback schema must also be able to READ the first real file:
-    the driver generation stores TIMESTAMP(NANOS) (surfaced as long under
-    nanosAsLong), so a TIMESTAMP fallback would start fine on the empty
-    dir and then kill the query on its first micro-batch — the fallback
-    declares BIGINT and converts, like the probed path."""
-    d = tmp_path / "late_landing"
-    d.mkdir()
-    stream = stream_events(spark, str(d))  # schema fixed while dir empty
-    _write_events(
-        str(d / "b0.parquet"),
-        [
-            (1, "2024-01-01 00:10:00", 7, "view", 1.0),
-            (2, "2024-01-01 00:20:00", 7, "view", 2.0),
-            (3, "2024-01-01 02:10:00", 8, "buy", 3.0),
-        ],
-    )
-    q = (
-        tumbling_counts(stream, watermark="0 seconds")
-        .writeStream.format("memory")
-        .queryName("late_landing_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = {
-        (r.window_start, r.event_type): r.n
-        for r in spark.sql("SELECT * FROM late_landing_counts").collect()
-    }
-    assert got == {
-        ("2024-01-01 00:00:00", "view"): 2,
-        ("2024-01-01 02:00:00", "buy"): 1,
-    }
-
-
-def test_stream_tumbling_equals_batch(spark, tmp_path, events_dir):
-    """Complete-mode streaming aggregation over all files == batch groupBy."""
-    stream = stream_events(spark, events_dir)
-    agg = (
-        stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-        )
-    )
-    run_available_now(agg, "tumbling_complete", "complete", str(tmp_path / "cp1"))
-    got = {
-        (r.window_start, r.event_type): r.n
-        for r in spark.sql("SELECT * FROM tumbling_complete").collect()
-    }
-    from ts_etl_spark.operators.events import q_events_tumbling
-
-    want = {
-        (r.window_start, r.event_type): r.n for r in q_events_tumbling(spark, SF).collect()
-    }
-    assert got == want
-
-
-def test_watermark_drops_late_data(spark, tmp_path):
-    """Append mode with a 30-minute watermark: an event arriving after the
-    watermark passed its window is dropped."""
-    d = tmp_path / "stream_in"
-    d.mkdir()
-    # The watermark used to filter batch N is the one computed at the END of
-    # batch N-1, so the advancing event (11:40 → watermark 11:10) must land
-    # two micro-batches before the late event for the drop to be observable.
-    _write_events(
-        str(d / "a.parquet"),
-        [
-            (1, "2024-01-01 10:05:00", 1, "click", 1.0),
-            (2, "2024-01-01 10:15:00", 1, "click", 1.0),
-            (3, "2024-01-01 11:40:00", 2, "click", 1.0),
-        ],
-    )
-    _write_events(
-        str(d / "b.parquet"),
-        [(4, "2024-01-01 12:10:00", 2, "click", 1.0)],
-    )
-    _write_events(
-        str(d / "c.parquet"),
-        [
-            (5, "2024-01-01 10:20:00", 1, "click", 1.0),  # LATE → dropped
-            (6, "2024-01-01 13:00:00", 2, "click", 1.0),
-        ],
-    )
-    import os
-    import time
-
-    # the file source orders batches by modification time — make it explicit
-    now = time.time()
-    for i, name in enumerate(["a.parquet", "b.parquet", "c.parquet"]):
-        os.utime(d / name, (now - 60 + 20 * i, now - 60 + 20 * i))
-    stream = stream_events(spark, str(d), max_files=1)
-    agg = tumbling_counts(stream, watermark="30 minutes")
-    run_available_now(agg, "late_drop", "append", str(tmp_path / "cp2"))
-    got = {
-        (r.window_start, r.n)
-        for r in spark.sql("SELECT * FROM late_drop").collect()
-    }
-    # 10:00 window emitted with count 2 — the late 10:20 event was DROPPED;
-    # 11:00 window emitted with count 1; 12:00/13:00 never finalized.
-    assert got == {("2024-01-01 10:00:00", 2), ("2024-01-01 11:00:00", 1)}
-
-
-def test_session_counts_stream_runs(spark, tmp_path, events_dir):
-    stream = stream_events(spark, events_dir)
-    run_available_now(
-        session_counts(stream), "sessions_stream", "append", str(tmp_path / "cp3")
-    )
-    # with a single batch the watermark only advances at batch end; emitted
-    # sessions must be a subset of the batch-mode sessionization
-    emitted = spark.sql("SELECT * FROM sessions_stream")
-    from ts_etl_spark.operators.events import q_events_session
-
-    batch = {
-        (r.user_id, r.session_start, r.n_events)
-        for r in q_events_session(spark, SF).collect()
-    }
-    got = {(r.user_id, r.session_start, r.n_events) for r in emitted.collect()}
-    assert got <= batch
-
-
-def test_stateful_user_totals(spark, tmp_path):
-    """applyInPandasWithState accumulates across micro-batches."""
-    d = tmp_path / "state_in"
-    d.mkdir()
-    _write_events(
-        str(d / "a.parquet"),
-        [(1, "2024-01-01 10:00:00", 7, "click", 1.0), (2, "2024-01-01 10:01:00", 7, "view", 1.0)],
-    )
-    _write_events(
-        str(d / "b.parquet"),
-        [(3, "2024-01-01 10:02:00", 7, "click", 1.0), (4, "2024-01-01 10:03:00", 8, "click", 1.0)],
-    )
-    stream = stream_events(spark, str(d), max_files=1)
-    run_available_now(
-        stateful_user_totals(stream), "user_totals", "update", str(tmp_path / "cp4")
-    )
-    rows = spark.sql("SELECT * FROM user_totals").collect()
-    # update mode appends one row per (user, batch); the LAST row per user
-    # carries the running total
-    final = {}
-    for r in rows:
-        final[r.user_id] = max(final.get(r.user_id, 0), r.total_events)
-    assert final == {7: 3, 8: 1}
-
-
-def test_streaming_dedup_by_event_id(spark, tmp_path):
-    """dropDuplicates on a stream: repeated event_ids across micro-batches
-    are emitted once."""
-    from ts_etl_spark.streaming.events import dedup_events
-
-    d = tmp_path / "dedup_in"
-    d.mkdir()
-    _write_events(
-        str(d / "a.parquet"),
-        [(1, "2024-01-01 10:00:00", 1, "click", 1.0), (2, "2024-01-01 10:01:00", 1, "view", 1.0)],
-    )
-    _write_events(
-        str(d / "b.parquet"),
-        [(2, "2024-01-01 10:01:00", 1, "view", 1.0), (3, "2024-01-01 10:02:00", 2, "click", 1.0)],
-    )
-    stream = stream_events(spark, str(d), max_files=1)
-    run_available_now(
-        dedup_events(stream).select("event_id"), "dedup_stream", "append",
-        str(tmp_path / "cp5"),
-    )
-    rows = [r.event_id for r in spark.sql("SELECT * FROM dedup_stream").collect()]
-    assert sorted(rows) == [1, 2, 3]  # id 2 emitted exactly once
-
-
-def test_foreach_batch_parquet_sink(spark, tmp_path):
-    from ts_etl_spark.streaming.events import run_foreach_batch_to_parquet
-
-    d = tmp_path / "fb_in"
-    d.mkdir()
-    _write_events(
-        str(d / "a.parquet"),
-        [(1, "2024-01-01 10:00:00", 1, "click", 1.0), (2, "2024-01-01 10:01:00", 1, "view", 2.0)],
-    )
-    out = str(tmp_path / "fb_out")
-    run_foreach_batch_to_parquet(
-        stream_events(spark, str(d)), out, str(tmp_path / "cp6")
-    )
-    back = spark.read.parquet(out)
-    assert back.count() == 2
-    assert {r.event_id for r in back.collect()} == {1, 2}
-
-
-def test_stream_csv_canonical_equals_batch(spark, tmp_path):
-    """The canonical normalization runs identically under readStream: a
-    landing directory of CSV files streams to the same rows the batch
-    source produces."""
-    from tests.golden import CSV_FIXTURE, GOLDEN_ROWS
-    from ts_etl_spark.schema import EXPECTED_HEADERS
-    from ts_etl_spark.streaming.canonical import stream_csv_canonical
-
-    d = tmp_path / "landing"
-    d.mkdir()
-    raw = open(CSV_FIXTURE, "rb").read()
-    header, rows = raw.split(b"\n", 1)[0], raw.split(b"\n", 1)[1].splitlines(True)
-    # two files arriving in the landing dir, each with its own header row
-    (d / "part1.csv").write_bytes(header + b"\n" + b"".join(rows[:4]))
-    (d / "part2.csv").write_bytes(header + b"\n" + b"".join(rows[4:]))
-
-    stream = stream_csv_canonical(spark, str(d), header.decode("latin1"))
-    run_available_now(stream, "csv_canonical", "append", str(tmp_path / "cp7"))
-    got = {
-        tuple(r[h] for h in EXPECTED_HEADERS)
-        for r in spark.sql("SELECT * FROM csv_canonical").collect()
-    }
-    assert got == set(GOLDEN_ROWS)
-
-
-def test_stream_stream_join_equals_batch(spark, tmp_path, events_dir):
-    """Watermarked stream-stream join over all files == the batch
-    bucketized interval join (same predicate, same rows)."""
-    from ts_etl_spark.operators.events import q_stream_stream_join
-    from ts_etl_spark.streaming.events import purchase_view_join
-
-    stream = stream_events(spark, events_dir)
-    joined = purchase_view_join(stream)
-    run_available_now(joined, "ssj", "append", str(tmp_path / "cp_ssj"))
-    got = {
-        (r.user_id, r.purchase_id, r.view_id, r.gap_seconds)
-        for r in spark.sql("SELECT * FROM ssj").collect()
-    }
-    want = {
-        (r.user_id, r.purchase_id, r.view_id, r.gap_seconds)
-        for r in q_stream_stream_join(spark, SF).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-@pytest.mark.slow
-def test_stream_stream_join_drops_late_purchase(spark, tmp_path):
-    """Bounded join state: once the watermark passes a view's joinable
-    horizon its state is evicted, so a late-arriving purchase that would
-    have matched it produces NO row — the property that keeps stream-stream
-    join state finite."""
-    from ts_etl_spark.streaming.events import purchase_view_join
-
-    d = tmp_path / "ssj_in"
-    d.mkdir()
-    _write_events(
-        str(d / "a.parquet"),
-        [
-            (1, "2024-01-01 10:00:00", 1, "view", 1.0),
-            (2, "2024-01-01 10:10:00", 1, "purchase", 1.0),
-        ],
-    )
-    # advance the watermark far past the view's horizon (wm = 13:00 - 30min)
-    _write_events(
-        str(d / "b.parquet"),
-        [
-            (3, "2024-01-01 13:00:00", 2, "view", 1.0),
-            (4, "2024-01-01 13:00:00", 2, "purchase", 1.0),
-        ],
-    )
-    # state eviction runs at END of batch, after that batch's input joined —
-    # so an advancer batch must land between the watermark jump and the late
-    # row for the eviction to be observable (same one-batch-delay mechanics
-    # as the tumbling late-drop test above)
-    _write_events(
-        str(d / "c.parquet"),
-        [(6, "2024-01-01 13:10:00", 3, "view", 1.0)],
-    )
-    # late purchase: would match view 1 (10:20 - 10:00 <= 30min), but that
-    # view's state was evicted at the end of the previous batch
-    _write_events(
-        str(d / "e.parquet"),
-        [(5, "2024-01-01 10:20:00", 1, "purchase", 1.0)],
-    )
-    import os
-    import time
-
-    now = time.time()
-    for i, name in enumerate(["a.parquet", "b.parquet", "c.parquet", "e.parquet"]):
-        os.utime(d / name, (now - 80 + 20 * i, now - 80 + 20 * i))
-    stream = stream_events(spark, str(d), max_files=1)
-    joined = purchase_view_join(stream, watermark="30 minutes")
-    run_available_now(joined, "ssj_late", "append", str(tmp_path / "cp_ssj_late"))
-    got = {
-        (r.purchase_id, r.view_id)
-        for r in spark.sql("SELECT * FROM ssj_late").collect()
-    }
-    # on-time matches only: (2,1) from batch a, (4,3) from batch b;
-    # the late purchase 5 must NOT produce (5,1)
-    assert got == {(2, 1), (4, 3)}
-
-
-def test_stream_sliding_equals_batch(spark, tmp_path, events_dir):
-    """Complete-mode sliding-window streaming aggregation == the sliding
-    branch of the batch events_windows query."""
-    from ts_etl_spark.operators.events import q_events_sliding
-    from ts_etl_spark.streaming.events import sliding_counts
-
-    stream = stream_events(spark, events_dir)
-    run_available_now(
-        sliding_counts(stream), "sliding_complete", "complete", str(tmp_path / "cp_sl")
-    )
-    got = {
-        (r.window_start, r.event_type): r.n
-        for r in spark.sql("SELECT * FROM sliding_complete").collect()
-    }
-    want = {
-        (r.window_start, r.event_type): r.n
-        for r in q_events_sliding(spark, SF).collect()
-    }
-    assert got == want and len(want) > 0
 
 
 # --------------------------------------------------------------------------

@@ -9,7 +9,7 @@ Layout:
     sources/        source adapters (CSV, PRN fixed-width, parquet tables) + registry
     sinks/          sink adapters (byte-exact JSON / HTML) + registry
     operators/      relational / dedup / similarity / text / multimodal operators
-    streaming/      Structured Streaming event-time operators (batch-equivalent first)
+    streaming/      Structured Streaming ingest (dedup-on-ingest, ANN serving index)
     cli.py          `python -m ts_etl_spark <in> <out>` front end
 
 Design stance (SURVEY.md §7.1): typed core, formatted edges; everything is a

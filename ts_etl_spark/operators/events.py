@@ -1,10 +1,6 @@
 """Event-time operators over the ``events`` table (SURVEY.md §2.4): tumbling,
-sliding and session windows, batch-checkable against the DuckDB oracle. The
-same transformations run unchanged under Structured Streaming — see
-``ts_etl_spark.streaming.events`` for the ``readStream`` + watermark wrappers
-(streaming semantics cannot be SQL-oracled, so the batch equivalents here
-carry the correctness gate; reference has no event-time semantics at all,
-SURVEY.md §2.3).
+sliding and session windows, batch-checkable against the DuckDB oracle (the
+reference has no event-time semantics at all, SURVEY.md §2.3).
 
 Scale notes: windowed groupBys shuffle on (window, key) — at 100 TB the
 tumbling aggregation is one partial-agg shuffle exactly like any groupBy.
@@ -29,9 +25,8 @@ def ts_str(c) -> F.Column:
 
 
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling windows per event_type (batch equivalent of the
-    streaming tumbling aggregation — kept as a named building block for the
-    streaming tests; registered via the merged ``events_windows``)."""
+    """1-hour tumbling windows per event_type (a named building block;
+    registered via the merged ``events_windows``)."""
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -68,8 +63,7 @@ def q_events_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch is a scan + partial-agg + one (window, key) shuffle — the union
     scans events once per window kind (the price of using the native
     ``F.window`` operator, which only exists in grouping position; the
-    branches parallelize independently and the same transformations run
-    under readStream — see streaming/events.py)."""
+    branches parallelize independently)."""
     tumbling = q_events_tumbling(spark, sf_dir).select(
         F.lit("tumbling").alias("kind"), "*"
     )
@@ -149,13 +143,10 @@ def q_events_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch equivalent of the watermarked stream-stream join
-    (``ts_etl_spark.streaming.events.purchase_view_join`` runs the same
-    predicate under ``readStream`` with watermark-bounded state): every
-    (purchase, view) pair by the same user where the view happened at most
-    30 minutes before the purchase. Executed as a bucketized interval join —
-    an equi-join on (user, time-bucket) with a residual filter, never a
-    range cross-join."""
+    """Every (purchase, view) pair by the same user where the view
+    happened at most 30 minutes before the purchase. Executed as a
+    bucketized interval join — an equi-join on (user, time-bucket) with a
+    residual filter, never a range cross-join."""
     from ts_etl_spark.operators.advanced import bucketized_range_join
 
     ev = load_table(spark, sf_dir, "events")

@@ -276,59 +276,6 @@ def cm_estimate_sql(
     )"""
 
 
-def hll_registers_by(
-    df: DataFrame, group_cols: list[str], col: str, p: int = HLL_P
-) -> DataFrame:
-    """Per-group HLL register tables in ONE pass: ``(*group_cols,
-    bucket, rho)`` with at most 2^p rows per group — the corpus-stats
-    shape for "distinct documents per language/domain/source" questions.
-    Same merge law as the global table (element-wise max within a
-    group), so per-group state persists and folds incrementally exactly
-    like ``hll_registers``."""
-    if p % 4 != 0 or not 4 <= p <= 16:
-        raise ValueError("p must be a multiple of 4 in [4, 16] (hex-char indexing)")
-    chars = p // 4
-    h = _hll_hash(F.col(col))
-    return (
-        df.filter(F.col(col).isNotNull())
-        .select(
-            *group_cols,
-            F.substring(h, 1, chars).alias("bucket"),
-            _rho(F.substring(h, chars + 1, 15)).alias("rho"),
-        )
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
-def hll_estimate_by(
-    registers: DataFrame, group_cols: list[str], p: int = HLL_P
-) -> DataFrame:
-    """Per-group estimates from a ``hll_registers_by`` table WITHOUT
-    materializing the 2^p-row dense register frame per group: occupied
-    registers always have rho ≥ 1, so the estimator's empty-register
-    terms reduce to counts — sum(2^-rho) over all m registers =
-    sum over occupied + (m - occupied), and zeros = m - occupied. One
-    partial-aggregated groupBy over the register table, linear in the
-    number of groups; same raw-vs-linear-counting switch as the global
-    ``hll_estimate``."""
-    if p != HLL_P:
-        raise ValueError("estimate constants are calibrated for p=8 (m=256)")
-    m = 1 << p
-    agg = registers.groupBy(*group_cols).agg(
-        F.count("*").alias("__occ"),
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("__s"),
-    )
-    zeros = F.lit(m) - F.col("__occ")
-    raw = F.lit(_ALPHA_256 * m * m) / (F.col("__s") + zeros.cast("double"))
-    linear = F.lit(float(m)) * F.log(F.lit(float(m)) / zeros)
-    return agg.select(
-        *group_cols,
-        F.when((raw <= 2.5 * m) & (zeros > 0), linear)
-        .otherwise(raw)
-        .alias("estimate"),
-    )
-
 # --------------------------------------------------------------------------
 # HDR histogram: mergeable QUANTILE state (the ranking dual of HLL/count-min)
 # --------------------------------------------------------------------------

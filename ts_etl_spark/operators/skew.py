@@ -148,56 +148,6 @@ def bucketed_running_sum(
     )
 
 
-def windowed_with_skew_guard(
-    df: DataFrame,
-    key: str,
-    order: str,
-    value: str,
-    out: str = "running_total",
-    hot_threshold: int = 1_000_000,
-    sample_fraction: float = 0.01,
-    n_buckets: int = 32,
-    seed: int = 42,
-) -> DataFrame:
-    """Per-key running sum that AUTO-routes around window skew.
-
-    A cheap probe estimates the heaviest key's row count (seeded sample →
-    per-key count → max, one skinny partial-agg shuffle returning a single
-    scalar).  If the estimate reaches ``hot_threshold`` rows — the regime
-    where one task would sort a hot key's entire history — the plan routes
-    through ``bucketed_running_sum``; otherwise the plain single-window
-    plan (one shuffle + sort) wins.  The routing decision happens at
-    plan-build time like AQE would at runtime; both routes produce
-    identical results (equivalence-tested), so the guard only changes the
-    physical strategy.
-
-    Same preconditions as ``bucketed_running_sum``: numeric/timestamp-like
-    ``order`` and unique (key, order) per row.  Equality across routes is
-    EXACT for decimal/integer ``value`` columns; float values can differ in
-    the last ulp because the bucketed route adds in a different order (the
-    same caveat any repartitioned float aggregation has)."""
-    from pyspark.sql.window import Window
-
-    sampled_max = (
-        df.sample(fraction=sample_fraction, seed=seed)
-        .groupBy(key)
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    est_hot = int((sampled_max or 0) / sample_fraction)
-    if est_hot >= hot_threshold:
-        return bucketed_running_sum(
-            df, key=key, order=order, value=value, n_buckets=n_buckets, out=out
-        )
-    w = (
-        Window.partitionBy(key)
-        .orderBy(order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return df.select(*df.columns, F.sum(value).over(w).alias(out))
-
-
 def salted_join(
     fact: DataFrame,
     dim: DataFrame,

@@ -1,6 +1,5 @@
-"""Corpus-composition utilities: deterministic sampling, target-mixture
-resampling, and the global pseudorandom shuffle a training-data pipeline
-runs before materializing examples.
+"""Corpus-composition utilities: deterministic sampling, split
+assignment and target-mixture resampling.
 
 Everything here is DETERMINISTIC — keyed on content hashes, never on
 ``rand()`` — so membership is reproducible across engines, partitionings,
@@ -104,14 +103,6 @@ def target_mixture_fractions(
         r[0]: r[1]
         for r in df.groupBy(strata_col).agg(F.count("*").alias("n")).collect()
     }
-    return _fractions_from_counts(counts, target_shares)
-
-
-def _fractions_from_counts(
-    counts: Mapping[str, int], target_shares: Mapping[str, float]
-) -> dict[str, float]:
-    """The driver-side core of ``target_mixture_fractions`` for callers
-    that already hold the per-stratum counts (one scan instead of two)."""
     # the binding stratum minimizes count/share; scale others down to it
     ratios = {
         s: counts[s] / share
@@ -146,33 +137,6 @@ def temperature_shares(
     return {s: v / total for s, v in powed.items()}
 
 
-def mix_to_temperature(
-    df: DataFrame,
-    strata_col: str,
-    tau: float,
-    key_cols: Sequence[str],
-    seed: str = "mix",
-) -> DataFrame:
-    """``mix_to_target`` with the targets derived from the corpus's own
-    composition at temperature ``tau`` (one extra #strata-bounded
-    aggregate). tau = 1 is a no-op mixture (natural shares), tau = 0
-    asks for a uniform mix — per ``target_mixture_fractions`` the
-    smallest stratum binds at fraction 1.0 and everything else
-    down-samples to match."""
-    counts = {
-        r[0]: r[1]
-        for r in df.groupBy(strata_col).agg(F.count("*").alias("n")).collect()
-    }
-    shares = temperature_shares(counts, tau)
-    # ONE scan: the counts already parameterize the fractions — going
-    # through mix_to_target would rerun the identical groupBy/collect
-    fracs = _fractions_from_counts(counts, shares)
-    kept = df.filter(F.col(strata_col).isin(*shares.keys())) if shares else df
-    return stratified_sample(
-        kept, strata_col, fracs, key_cols, seed=seed, default_fraction=1.0
-    )
-
-
 def mix_to_target(
     df: DataFrame,
     strata_col: str,
@@ -188,26 +152,4 @@ def mix_to_target(
     kept = df.filter(F.col(strata_col).isin(*target_shares.keys()))
     return stratified_sample(
         kept, strata_col, fracs, key_cols, seed=seed, default_fraction=1.0
-    )
-
-
-def deterministic_shuffle(
-    df: DataFrame, key_cols: Sequence[str], seed: str = "shuf", partitions: int | None = None
-) -> DataFrame:
-    """Global pseudorandom ordering for training-example streams: sort by a
-    seeded content hash. Changing the seed reshuffles; the same seed always
-    reproduces the same order.
-
-    Plan shape: ``repartitionByRange`` + ``sortWithinPartitions`` over the
-    hash — a RANGE exchange (sampled boundaries, all partitions balanced)
-    followed by per-partition sorts. This is exactly what ``orderBy``
-    plans, spelled explicitly so the partition count is controllable; there
-    is never a single-partition global sort."""
-    h = F.xxhash64(F.lit(seed), *[F.col(c).cast("string") for c in key_cols])
-    out = df.withColumn("__shuffle_key", h)
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return (
-        out.repartitionByRange(n, "__shuffle_key")
-        .sortWithinPartitions("__shuffle_key")
-        .drop("__shuffle_key")
     )

@@ -77,7 +77,7 @@ def get_spark(
         # the driver's events.parquet stores TIMESTAMP(NANOS) which the
         # vectorized reader rejects; read as long and convert in the loader
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # bucketed-table home (saveAsTable); never inside the repo
+        # managed-table home (saveAsTable, CREATE TABLE); never inside the repo
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/ts-etl-spark-warehouse"),
@@ -90,17 +90,20 @@ def get_spark(
 
 @contextmanager
 def owned_session(spark: SparkSession | None, app_name: str) -> Iterator[SparkSession]:
-    """Yield the caller's session when one is given; otherwise yield
-    ``get_spark(app_name=...)`` and stop it on exit. A session is stopped
-    only when no SparkContext was running on entry: ``getOrCreate`` hands
-    back a live one, and stopping it would kill its owner's session."""
+    """Yield the caller's session when one is given. Otherwise, when a
+    SparkContext is already running, yield its session as it is: it
+    belongs to someone else, so it is neither re-tuned (``get_spark``
+    would re-apply its runtime conf) nor stopped. Only with no context
+    running is a session started with ``get_spark(app_name=...)``, and
+    stopped on exit."""
     if spark is not None:
         yield spark
         return
-    started = SparkContext._active_spark_context is None
+    if SparkContext._active_spark_context is not None:
+        yield SparkSession.builder.getOrCreate()
+        return
     spark = get_spark(app_name=app_name)
     try:
         yield spark
     finally:
-        if started:
-            spark.stop()
+        spark.stop()

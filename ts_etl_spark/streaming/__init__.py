@@ -1,2 +1,3 @@
-"""Structured Streaming operators (SURVEY.md §2.4: event-time windows,
-watermarks, late-data handling, custom stateful processing)."""
+"""Structured Streaming ingest: the file-source drain with crash-safe
+dedup state (``ingest``) and the persisted ANN serving index it feeds
+(``ann_index``)."""
