@@ -7,7 +7,8 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from ts_etl_spark.operators.boilerplate import boilerplate_scores, q_boilerplate
+from ts_etl_spark.operators.boilerplate import boilerplate_scores
+from ts_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -44,7 +45,9 @@ def test_planted_template_is_detected(spark):
 def test_matches_duckdb_mirror_on_real_corpus(spark):
     got = {
         r.doc_id: (r.n_grams, r.n_boiler)
-        for r in q_boilerplate(spark, SF).collect()
+        for r in boilerplate_scores(
+            load_table(spark, SF, "documents").select("doc_id", "text")
+        ).collect()
     }
     con = duckdb.connect()
     con.execute(

@@ -63,14 +63,20 @@ def test_malformed_csv_errors(spark):  # E7 end-to-end
         run_conversion("csv", "json", b'Name,Address\n"Unclosed,B\n', buf, spark=spark)
 
 
-@pytest.mark.parametrize("in_type", ["csv", "prn"])
-def test_json_order_preserved_across_partitions(spark, tmp_path, in_type):
+@pytest.mark.parametrize(
+    "in_type,out_type",
+    [("csv", "json"), ("prn", "json"), ("prn", "html")],
+    ids=["csv", "prn", "prn-html"],
+)
+def test_json_order_preserved_across_partitions(spark, tmp_path, in_type, out_type):
     """The rendered sinks must emit rows in input order even when the file
-    splits into multiple scan partitions (__row_id ordering)."""
+    splits into multiple scan partitions (the scan's own partition-then-row
+    order; no sort)."""
     import io
+    import re
 
     from tests.test_differential_generated import _prn_bytes
-    from ts_etl_spark.sinks.json_sink import write_json
+    from ts_etl_spark.sinks import SINKS
     from ts_etl_spark.sources import SOURCES
 
     if in_type == "csv":
@@ -85,11 +91,11 @@ def test_json_order_preserved_across_partitions(spark, tmp_path, in_type):
         )
     path = tmp_path / f"big.{in_type}"
     path.write_bytes(data)
-    read = SOURCES[in_type]
+    read, write = SOURCES[in_type], SINKS[out_type]
 
     def render(df):
         buf = io.StringIO()
-        write_json(df, buf)
+        write(df, buf)
         return buf.getvalue()
 
     single = render(read(spark, str(path)))
@@ -102,7 +108,10 @@ def test_json_order_preserved_across_partitions(spark, tmp_path, in_type):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
     assert multi == single
-    names = [i["Name"] for i in __import__("json").loads(single)]
+    if out_type == "json":
+        names = [i["Name"] for i in json.loads(single)]
+    else:
+        names = re.findall(r"<td>(P\d{4})</td>", single)
     assert names == [f"P{i:04d}" for i in range(300)]
 
 

@@ -19,7 +19,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from ts_etl_spark.fs import count_files
+from ts_etl_spark.fs import hadoop_fs
 from ts_etl_spark.streaming.ingest import (
     IngestConfig,
     _compact_manifest,
@@ -43,6 +43,19 @@ def _rand_words(rng, n):
 
 def _snapshot(spark, d):
     return sorted(tuple(str(x) for x in r) for r in spark.read.parquet(d).collect())
+
+
+def count_files(spark, path: str) -> int:
+    """Number of parquet files under ``path``, recursive; 0 if absent."""
+    fs, p = hadoop_fs(spark, path)
+    if not fs.exists(p):
+        return 0
+    it = fs.listFiles(p, True)
+    n = 0
+    while it.hasNext():
+        if it.next().getPath().getName().endswith(".parquet"):
+            n += 1
+    return n
 
 
 @pytest.fixture()

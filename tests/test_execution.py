@@ -172,13 +172,17 @@ TRIPWIRES = {
     ".repartition(par": (re.compile(r"\.repartition\(par\b"), "sources/tables.py"),
     "spark.stop()": (re.compile(r"spark\.stop\(\)"), "session.py"),
     "spark.readStream": (re.compile(r"spark\.readStream"), "streaming/ingest.py"),
+    "monotonically_increasing_id": (
+        re.compile(r"monotonically_increasing_id"),
+        "sources/prn_source.py",
+    ),
 }
 
 
 def test_execution_mechanisms_live_in_one_home():
     """Thread pools, construction memos, scan-width guards, session
-    stops and streaming reads each have one home; a copy anywhere else
-    fails here."""
+    stops, streaming reads and row-position ids each have one home; a
+    copy anywhere else fails here."""
     stray = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()

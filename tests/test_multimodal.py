@@ -7,7 +7,6 @@ from ts_etl_spark.operators.multimodal import (
     AUDIO_HOP,
     AUDIO_WIN,
     audio_windows,
-    decode_image,
     fake_decode,
     q_multimodal_meta_resize,
     resolve_decoder,
@@ -20,7 +19,6 @@ SF = "/root/testdata/sf0.001"
 def test_decoder_seam_explicit_callable_wins():
     custom = lambda payload: (7, 9)  # noqa: E731
     assert resolve_decoder(custom) is custom
-    assert decode_image(b"anything", custom) == (7, 9)
 
 
 def test_decoder_seam_default_resolution():
@@ -35,8 +33,6 @@ def test_decoder_seam_default_resolution():
     except ImportError:
         with pytest.raises(NotImplementedError, match="decode"):
             resolve_decoder()
-        with pytest.raises(NotImplementedError, match="decode"):
-            decode_image(b"\x89PNG....")
 
 
 def test_meta_resize_injected_decoder(spark):

@@ -3,9 +3,10 @@ queries efficient at scale, pinned via .explain() (see plans/audit.py)."""
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from tests.golden import CSV_FIXTURE
+from tests.golden import CSV_FIXTURE, PRN_FIXTURE
 from ts_etl_spark.operators.relational import (
     q1_pricing_summary,
     q5_local_supplier_volume,
@@ -22,7 +23,6 @@ from ts_etl_spark.plans.audit import (
     pushed_filters,
     read_schemas,
 )
-from ts_etl_spark.sources.csv_source import read_csv
 
 SF = "/root/testdata/sf0.01"
 
@@ -71,9 +71,20 @@ def test_filter_project_no_shuffle(spark):
     assert pushed_filters(df)  # quantity/returnflag predicates reach the scan
 
 
-def test_csv_source_single_codegen_stage(spark):
-    df = read_csv(spark, CSV_FIXTURE).drop("__row_id")
-    assert num_exchanges(df) == 0
+@pytest.mark.parametrize("render", ["json_rows", "csv_rows"])
+@pytest.mark.parametrize("source", ["csv", "prn"])
+def test_csv_source_single_codegen_stage(spark, source, render):
+    """A rendered sink streams a source frame in scan order: one codegen
+    stage, no exchange and no sort between the scan and the driver."""
+    from ts_etl_spark.sinks.csv_sink import csv_rows
+    from ts_etl_spark.sinks.json_sink import json_rows
+    from ts_etl_spark.sources import SOURCES
+
+    fixture = CSV_FIXTURE if source == "csv" else PRN_FIXTURE
+    rows = {"json_rows": json_rows, "csv_rows": csv_rows}[render]
+    df = rows(SOURCES[source](spark, str(fixture)))
+    assert num_exchanges(df) == 0, plan_str(df)
+    assert count_nodes(df, "Sort") == 0, plan_str(df)
     assert has_whole_stage_codegen(df)
 
 
@@ -339,8 +350,6 @@ def test_runtime_bloom_filter_injected_for_selective_join(spark):
 # ---------------------------------------------------------------------------
 # Global anti-pattern sweep: EVERY registered query, not just the pinned ones
 # ---------------------------------------------------------------------------
-
-import pytest
 
 from ts_etl_spark.operators import all_queries
 

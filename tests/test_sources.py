@@ -4,15 +4,13 @@
 import pytest
 
 from tests.golden import CSV_FIXTURE, GOLDEN_ROWS, PRN_FIXTURE
-from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
+from ts_etl_spark.schema import EXPECTED_HEADERS
 from ts_etl_spark.sources.csv_source import read_csv, validate_csv_text
 from ts_etl_spark.sources.prn_source import infer_specs, read_prn
 
 
 def rows_of(df):
-    cols = [c for c in df.columns if c != ROW_ID]
-    ordered = df.orderBy(ROW_ID) if ROW_ID in df.columns else df
-    return [tuple(r[c] for c in cols) for r in ordered.collect()]
+    return [tuple(r) for r in df.collect()]
 
 
 def write_tmp(tmp_path, name, text, encoding="latin1"):
@@ -43,7 +41,7 @@ def test_csv_header_casing(spark, tmp_path):  # E2
         "A,B,1234 ab,06-1,54.5,01/01/1987\n"
     )
     df = read_csv(spark, write_tmp(tmp_path, "c.csv", text))
-    assert df.columns[1:] == list(EXPECTED_HEADERS)
+    assert df.columns == list(EXPECTED_HEADERS)
     assert rows_of(df) == [("A", "B", "1234AB", "061", "54.50", "1987-01-01")]
 
 
@@ -59,7 +57,7 @@ def test_csv_extra_columns_dropped(spark, tmp_path):  # E4
         "A,B,IGNORED,1234 ab,06-1,54.5,chess,01/01/1987\n"
     )
     df = read_csv(spark, write_tmp(tmp_path, "x.csv", text))
-    assert df.columns[1:] == list(EXPECTED_HEADERS)
+    assert df.columns == list(EXPECTED_HEADERS)
     assert rows_of(df) == [("A", "B", "1234AB", "061", "54.50", "1987-01-01")]
 
 
@@ -250,7 +248,7 @@ def test_jsonl_missing_and_extra_keys(spark, tmp_path):
     p = tmp_path / "part.jsonl"
     with open(p, "w", encoding="utf-8") as f:
         f.write(_json.dumps({"name": "A", "ignored": "x"}) + "\n")
-    (row,) = read_jsonl(spark, str(p), with_row_id=False).collect()
+    (row,) = read_jsonl(spark, str(p)).collect()
     assert row["Name"] == "A"
     assert row["Credit Limit"] == "0.00"
     assert row["Birthday"] == ""

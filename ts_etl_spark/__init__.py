@@ -4,7 +4,7 @@ re-expressed Spark-first.
 
 Layout:
     session.py      SparkSession factory with scale-tuned defaults
-    schema.py       canonical 6-column schema, defaults, typed mapping
+    schema.py       canonical 6-column schema and defaults
     functions/      pure Column->Column scalar functions (normalizers, text, vectors)
     sources/        source adapters (CSV, PRN fixed-width, parquet tables) + registry
     sinks/          sink adapters (byte-exact JSON / HTML) + registry

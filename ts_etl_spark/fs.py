@@ -114,16 +114,3 @@ def mkdirs(spark: SparkSession, path: str) -> None:
     """Create ``path`` (and parents) if absent."""
     fs, p = hadoop_fs(spark, path)
     fs.mkdirs(p)
-
-
-def count_files(spark: SparkSession, path: str, suffix: str = ".parquet") -> int:
-    """Number of ``suffix`` files under ``path``, recursive; 0 if absent."""
-    fs, p = hadoop_fs(spark, path)
-    if not fs.exists(p):
-        return 0
-    it = fs.listFiles(p, True)
-    n = 0
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(suffix):
-            n += 1
-    return n

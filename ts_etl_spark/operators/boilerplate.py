@@ -25,11 +25,10 @@ keep-every-row contract of the LM scorer.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ts_etl_spark.operators.textops import _word_grams
-from ts_etl_spark.sources.tables import load_table
 
 BOILER_N = 5
 
@@ -101,15 +100,4 @@ def boilerplate_scores(
             .otherwise(F.lit(0.0))
             .alias("boiler_frac"),
         )
-    )
-
-
-def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entry over the documents table (registered via
-    ``quality.corpus_quality_signals``; the standalone DuckDB mirror lives
-    in tests/test_boilerplate.py). No ``persisted`` seam: a lazy return
-    has no release point, so the gram frame recomputes once rather than
-    leaking a corpus-scale cache per call in a long-lived session."""
-    return boilerplate_scores(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )

@@ -71,11 +71,6 @@ def resolve_decoder(decoder=None):
         ) from exc
 
 
-def decode_image(payload: bytes, decoder=None) -> tuple[int, int]:
-    """Decode one image payload via the pluggable seam above."""
-    return resolve_decoder(decoder)(payload)
-
-
 def fake_decode(payload: bytes) -> tuple[int, int]:
     """Deterministic fake decoder: pseudo-dimensions from the byte length.
     Mirrored by the DuckDB oracle arithmetic."""

@@ -1,4 +1,9 @@
-"""Sink adapters + registry (reference renderers/index.ts:12-58, O20)."""
+"""Sink adapters + registry (reference renderers/index.ts:12-58, O20).
+
+The rendered sinks stream rows in the frame's own order. A source frame is
+an unshuffled scan, so its partition-then-row order is input order; a
+caller that shuffles must restore its own order before rendering.
+"""
 
 from __future__ import annotations
 

@@ -20,7 +20,7 @@ from typing import IO
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
+from ts_etl_spark.schema import EXPECTED_HEADERS
 
 DELIM = ","
 
@@ -37,11 +37,8 @@ def _quoted(c: Column) -> Column:
 def csv_rows(df: DataFrame) -> DataFrame:
     """Distributed per-row CSV rendering, input-ordered."""
     cols = [c for c in EXPECTED_HEADERS if c in df.columns]
-    out = df
-    if ROW_ID in df.columns:
-        out = out.orderBy(ROW_ID)
     line = F.concat_ws(DELIM, *[_quoted(F.col(f"`{c}`")) for c in cols])
-    return out.select(line.alias("line"))
+    return df.select(line.alias("line"))
 
 
 def write_csv(df: DataFrame, out: IO) -> None:

@@ -17,7 +17,7 @@ from typing import IO
 
 from pyspark.sql import DataFrame
 
-from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
+from ts_etl_spark.schema import EXPECTED_HEADERS
 
 
 def escape_html(unsafe: str) -> str:
@@ -64,11 +64,8 @@ def write_html(df: DataFrame, out: IO) -> None:
     out.write("      </tr>\n    </thead>\n    <tbody>\n")
 
     cols = [c for c in EXPECTED_HEADERS if c in df.columns]
-    ordered = df.orderBy(ROW_ID) if ROW_ID in df.columns else df
-    ordered = ordered.select(*[f"`{c}`" for c in cols])
-
     any_rows = False
-    for row in ordered.toLocalIterator():
+    for row in df.select(*[f"`{c}`" for c in cols]).toLocalIterator():
         any_rows = True
         d = row.asDict()
         out.write("      <tr>\n")

@@ -8,7 +8,7 @@ Spark-first split of the work (SURVEY.md §4.1 hard part 1):
 - per-row JSON strings are computed DISTRIBUTED via ``to_json(struct(...))``
   (Jackson, codegen; same minimal-escaping behavior as ``JSON.stringify``),
 - only the final framing/concatenation runs on the driver via
-  ``toLocalIterator`` over the id-ordered frame — O(1) driver memory,
+  ``toLocalIterator`` in the frame's own order — O(1) driver memory,
   no ``collect()`` of the whole dataset.
 
 The contract is a single ordered text artifact, so a single writer is
@@ -23,16 +23,13 @@ from typing import IO
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
+from ts_etl_spark.schema import EXPECTED_HEADERS
 
 
 def json_rows(df: DataFrame) -> DataFrame:
     """Distributed per-row JSON rendering, input-ordered."""
     cols = [c for c in EXPECTED_HEADERS if c in df.columns]
-    out = df
-    if ROW_ID in df.columns:
-        out = out.orderBy(ROW_ID)
-    return out.select(
+    return df.select(
         F.to_json(F.struct(*[F.col(f"`{c}`") for c in cols])).alias("js")
     )
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ts_etl_spark.functions.normalize import normalize_row_exprs
-from ts_etl_spark.schema import EXPECTED_HEADERS, ROW_ID
+from ts_etl_spark.schema import EXPECTED_HEADERS
 
 
 def match_headers(actual: list[str]) -> dict[str, str]:
@@ -47,13 +47,12 @@ def read_csv(
     delimiter: str = ",",
     encoding: str = "ISO-8859-1",
     multi_line: bool = False,
-    with_row_id: bool = True,
 ) -> DataFrame:
     """Read a CSV file into the canonical normalized 6-column string frame.
 
-    ``with_row_id`` appends a ``__row_id`` column carrying source order for
-    the byte-exact sinks (SURVEY.md §4.1). Ids are assigned per input split;
-    for the single-blob CLI path this is exactly input order.
+    The plan is a scan plus one projection with no shuffle, so the frame's
+    partition-then-row order is input order, which the rendered sinks
+    stream as is.
     """
     raw = (
         spark.read.option("header", True)
@@ -70,8 +69,6 @@ def read_csv(
     )
     mapping = match_headers(raw.columns)
     exprs = normalize_row_exprs({h: F.col(f"`{a}`") for h, a in mapping.items()})
-    if with_row_id:
-        exprs = [F.monotonically_increasing_id().alias(ROW_ID), *exprs]
     return raw.select(exprs)
 
 

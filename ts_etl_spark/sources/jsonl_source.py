@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ts_etl_spark.functions.normalize import normalize_row_exprs
-from ts_etl_spark.schema import ROW_ID
 from ts_etl_spark.sources.csv_source import match_headers
 
 
@@ -31,7 +30,6 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     encoding: str = "UTF-8",
-    with_row_id: bool = True,
 ) -> DataFrame:
     """Read a JSON-Lines file into the canonical normalized 6-column frame.
 
@@ -54,6 +52,4 @@ def read_jsonl(
     )
     mapping = match_headers(raw.columns)
     exprs = normalize_row_exprs({h: F.col(f"`{a}`") for h, a in mapping.items()})
-    if with_row_id:
-        exprs = [F.monotonically_increasing_id().alias(ROW_ID), *exprs]
     return raw.select(exprs)

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ts_etl_spark.functions.normalize import js_trim, normalize_row_exprs
-from ts_etl_spark.schema import EXPECTED_HEADERS, H_CREDIT_LIMIT, ROW_ID
+from ts_etl_spark.schema import EXPECTED_HEADERS, H_CREDIT_LIMIT
 
 #: leading-integer prefix, JS ``parseInt(v, 10)`` semantics
 _INT_PREFIX = r"^[+-]?\d+"
@@ -126,31 +126,28 @@ def read_prn(
     spark: SparkSession,
     path: str,
     encoding: str = "ISO-8859-1",
-    with_row_id: bool = True,
 ) -> DataFrame:
     """Read a PRN fixed-width file into the canonical normalized frame.
 
     The header is the first non-blank line (reference handleLine,
     prnParser.ts:148-158 skips blanks before the header); everything after
-    it is data; blank data lines are dropped (O7)."""
+    it is data; blank data lines are dropped (O7). ``pos`` exists only to
+    find the lines after the header and is dropped by the final select."""
     lines = _read_lines(spark, path, encoding).select(
-        F.monotonically_increasing_id().alias(ROW_ID), "line"
+        F.monotonically_increasing_id().alias("pos"), "line"
     )
     # Driver-side header fetch: one tiny job reading the file head — the
     # same "prepared plan" specialization the reference does once per run.
-    head = (
-        lines.filter(js_trim(F.col("line")) != "")
-        .orderBy(ROW_ID)
-        .limit(1)
-        .collect()
-    )
+    # limit(1) scans partitions in index order, so this is the first
+    # non-blank line of the file.
+    head = lines.filter(js_trim(F.col("line")) != "").limit(1).collect()
     if not head:
-        return empty_canonical(spark, with_row_id)
+        return empty_canonical(spark)
     header_id, header_line = head[0][0], head[0][1]
     specs = infer_specs(header_line)
 
     data = lines.filter(
-        (F.col(ROW_ID) > header_id) & (js_trim(F.col("line")) != "")
+        (F.col("pos") > header_id) & (js_trim(F.col("line")) != "")
     )
     present: dict[str, Column] = {}
     for spec in specs:
@@ -158,14 +155,10 @@ def read_prn(
         if spec.name == H_CREDIT_LIMIT:
             raw = _prescale_cents(raw)
         present[spec.name] = raw
-    exprs = normalize_row_exprs(present)
-    if with_row_id:
-        exprs = [F.col(ROW_ID), *exprs]
-    return data.select(exprs)
+    return data.select(normalize_row_exprs(present))
 
 
-def empty_canonical(spark: SparkSession, with_row_id: bool = True) -> DataFrame:
+def empty_canonical(spark: SparkSession) -> DataFrame:
     """Zero-row canonical frame (empty-input path, prnParser.ts:180-184)."""
-    fields = [T.StructField(ROW_ID, T.LongType())] if with_row_id else []
-    fields += [T.StructField(h, T.StringType()) for h in EXPECTED_HEADERS]
+    fields = [T.StructField(h, T.StringType()) for h in EXPECTED_HEADERS]
     return spark.createDataFrame([], T.StructType(fields))
